@@ -53,8 +53,6 @@ def main() -> None:
     a = run_session_pipeline(
         fx["firing_rates"], fx["trial_events"], fx["neurons"], cfg
     )
-    a["sampled_neurons"].cache()
-    a["cca_weights"].cache()
     write_partitioned(a["psth"], os.path.join(out_dir, "psth"), ["session"])
     write_partitioned(a["cca_r2"], os.path.join(out_dir, "cca_r2"), ["session"])
     print("  psth rows:", a["psth"].count(),

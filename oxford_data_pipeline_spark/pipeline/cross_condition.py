@@ -17,6 +17,7 @@ from pyspark.sql.window import Window as W
 
 from oxford_data_pipeline_spark.pipeline.session_pipeline import PipelineConfig
 from oxford_data_pipeline_spark.operators.event_window import segment_by_events
+from oxford_data_pipeline_spark.plans.memo import bounded_once
 
 
 def segment_conditions(
@@ -174,7 +175,8 @@ def run_cross_condition(
     """Entry B end-to-end, given Entry A's sampled neurons + weights."""
     segmented_all = segment_conditions(firing, events, cfg, labels)
     projections = cross_condition_projections(segmented_all, sampled, cca_weights)
-    timecourses = session_mean_timecourses(projections)
+    # every downstream table reads the time courses: materialize them once
+    timecourses = bounded_once(session_mean_timecourses(projections))
     peaks = peak_amplitudes(timecourses)
     decisions = flip_decisions(timecourses, cfg.trial_type)
     aligned = aligned_cross_session_stats(timecourses, decisions)

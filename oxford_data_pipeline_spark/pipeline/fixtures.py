@@ -124,4 +124,8 @@ def generate_fixtures(
         ),
         schema="session string, neuron_id int, region string, probe string, stable boolean",
     )
-    return {"firing_rates": firing, "trial_events": events, "neurons": neurons}
+    # `createDataFrame(pandas)` keeps every row inline in the plan, so each
+    # later analysis of a plan over these tables would re-hash ~288k firing
+    # rows; an eager local checkpoint turns each table into a leaf scan.
+    tables = {"firing_rates": firing, "trial_events": events, "neurons": neurons}
+    return {name: df.localCheckpoint(eager=True) for name, df in tables.items()}

@@ -19,6 +19,17 @@ Phase map (reference → here):
 
 Every stage is a DataFrame in, DataFrame out; all sessions process in
 one job, in parallel, with one shuffle per stage boundary.
+
+Three relations are materialized once per pipeline run with
+`plans.memo.bounded_once`, because several outputs and actions read
+each of them and Spark would otherwise re-run their whole lineage for
+every one: the sampled neurons (read by PSTH, both fits, projection and
+the GLM stage) and the two grouped-fit outputs, whose `applyInPandas`
+kernels are the costliest step and feed two tables each. Their sizes
+depend on sessions, regions and components, not on the trial count.
+The segmented samples grow with trials × neurons × window, so they stay
+lazy. Entry B (`cross_condition.run_cross_condition`) materializes its
+per-session time courses the same way.
 """
 
 from __future__ import annotations
@@ -32,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from oxford_data_pipeline_spark.operators.event_window import segment_by_events
+from oxford_data_pipeline_spark.plans.memo import bounded_once
 
 
 @dataclass(frozen=True)
@@ -202,11 +214,12 @@ def fit_region_pca(
                            "explained", "cumulative"]
         )
 
-    out = data.groupBy("session", "region").applyInPandas(
+    # both tables below read this one fit output
+    out = bounded_once(data.groupBy("session", "region").applyInPandas(
         fit,
         schema="session string, region string, neuron_id int, component int,"
         " weight double, explained double, cumulative double",
-    )
+    ))
     weights = out.select("session", "region", "neuron_id", "component", "weight")
     variance = out.select("session", "region", "component", "explained", "cumulative").distinct()
     return weights, variance
@@ -247,7 +260,7 @@ def fit_pair_cca(
         # filled per the engine's implicit-zero segment semantics.
         # Pivoting each side independently and truncating to min length
         # would silently shift every sample after a one-sided gap and
-        # correlate mismatched timepoints (round-1 ADVICE, medium).
+        # correlate mismatched timepoints.
         shared = pd.MultiIndex.from_frame(
             pdf[["trial_id", "t"]].drop_duplicates().sort_values(["trial_id", "t"])
         )
@@ -299,11 +312,12 @@ def fit_pair_cca(
                            "side", "neuron_id", "r2", "weight"]
         )
 
-    out = sides.groupBy("session", "pair_r1", "pair_r2").applyInPandas(
+    # cca_r2 and cca_weights are two filters over this one fit output
+    out = bounded_once(sides.groupBy("session", "pair_r1", "pair_r2").applyInPandas(
         fit,
         schema="session string, pair_r1 string, pair_r2 string, fold int,"
         " component int, side string, neuron_id int, r2 double, weight double",
-    )
+    ))
     cca_r2 = out.filter(F.col("fold") > 0).select(
         "session", "pair_r1", "pair_r2", "fold", "component", "r2"
     )
@@ -393,7 +407,7 @@ def run_session_pipeline(
     cfg = cfg or PipelineConfig()
     segmented = segment_trials(firing, events, cfg)
     admitted = admit_regions(neurons, cfg)
-    sampled = sample_neurons(admitted, cfg)
+    sampled = bounded_once(sample_neurons(admitted, cfg))
     pairs = region_pairs(admitted)
     psth = psth_table(segmented, sampled)
     pca_weights, pca_variance = fit_region_pca(segmented, sampled, cfg)

@@ -24,20 +24,25 @@ from pyspark.sql import DataFrame, SparkSession
 
 def bounded_once(df: DataFrame) -> DataFrame:
     """Materialize-once marker for a BOUNDED intermediate that several
-    subtrees of ONE query re-reference: a LAZY ``localCheckpoint``.
+    subtrees or actions re-reference: a lazy ``localCheckpoint``.
 
-    Like the eager form (r14) it truncates the SQL plan at construction
-    — every consumer reads one ``Scan ExistingRDD`` instead of
-    re-expanding the subtree's lineage, so the optimizer never sees the
-    repeated towers — but the materialization job is folded into the
-    query's own action instead of running as a separate barrier job at
-    DataFrame-construction time (r14 verdict item 4 + advisor item 4:
-    the eager job cost more than the recompute it saved at sf0.1, and
-    callers that build the plan without consuming it paid the full
-    aggregation).  First consumer computes the RDD once; its blocks are
-    kept on executors (MEMORY_AND_DISK) for the remaining consumers.
-    Same per-run semantics as eager: nothing survives the query run,
-    nothing is keyed on the input path."""
+    It truncates the SQL plan at construction: every consumer reads one
+    ``Scan ExistingRDD`` instead of re-expanding the subtree's lineage,
+    so the optimizer never sees the repeated towers and the subtree
+    runs once however many actions read it.  The first action computes
+    the checkpointed RDD; its blocks stay on the executors
+    (MEMORY_AND_DISK) for the remaining consumers.
+
+    "Lazy" covers the last stage only.  Creating the checkpoint builds
+    the subtree's physical plan, and under adaptive query execution
+    (which ``session.get_spark`` turns on) that runs every shuffle and
+    broadcast stage below it at once, at construction; only the final
+    stage, the one that yields the checkpointed rows, waits for the
+    first action.  So use it on relations whose size does not grow with
+    the input (fits, per-group summaries, sampled keys), and expect a
+    caller that builds the plan without consuming it to pay for those
+    stages.  Nothing survives the run and nothing is keyed on the input
+    path."""
     return df.localCheckpoint(eager=False)
 
 

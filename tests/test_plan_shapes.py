@@ -375,3 +375,29 @@ def test_bitext_plan_no_python_and_partitioned_windows(spark):
     assert wins, "expected window nodes"
     for grp in wins:
         assert ("src_id" in grp) or ("tgt_id" in grp), grp
+
+
+def test_oxford_grouped_fits_run_once(spark, domain_fixtures, entry_a):
+    """Entry A's CV-PCA/CV-CCA outputs and Entry B's time courses are
+    materialized once per run, so no table read downstream of them
+    re-runs a grouped fit: none of their executed plans may contain a
+    FlatMapGroupsInPandas node.  Entry B's tables read the time courses
+    only, so their plans never re-expand the trial windows either."""
+    from oxford_data_pipeline_spark.pipeline.cross_condition import run_cross_condition
+    from oxford_data_pipeline_spark.pipeline.fixtures import LABELS
+
+    cfg, a = entry_a
+    fx = domain_fixtures
+    b = run_cross_condition(
+        fx["firing_rates"], fx["trial_events"], a["sampled_neurons"],
+        a["cca_weights"], cfg, LABELS,
+    )
+    tables = {k: a[k] for k in ("cca_r2", "cca_weights", "projections",
+                                 "significant_components")}
+    entry_b = ("flip_decisions", "aligned_stats", "condition_similarity")
+    tables.update({k: b[k] for k in entry_b})
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, f"{name} re-runs a fit:\n{plan}"
+        if name in entry_b:
+            assert "Generate" not in plan, f"{name} re-segments:\n{plan}"
