@@ -7,8 +7,15 @@ kept under the driver's ~2000-char tail-capture window (which ate the
 round-3 record): `value` sums EVERY query, while the line's `queries`
 dict carries the slowest queries that fit the byte budget.  The
 complete grids — rep-1 for all queries, per-query minima across reps,
-the secondary-SF run, and index-build timings — go to
-BENCH_DETAIL.json next to this script.
+the secondary-SF run, and index-build timings — go to a detail file
+next to this script, one path per measured configuration (core count
+and primary scale factor, both recorded in the file as `cpus` and
+`sf`).  Only the reference configuration — sf0.1 at the session's
+default core count (`session.DEFAULT_CPUS`) — writes BENCH_DETAIL.json,
+the committed reference grid; any other run writes its own file
+(BENCH_DETAIL_c8.json for 8 cores, BENCH_DETAIL_sf0.01.json for
+sf0.01 at the default count, BENCH_DETAIL_c8_sf0.01.json for both) and
+takes its load-factor reference from that same file.
 
 An explicit index-build phase precedes the timed queries: the memoized
 artifacts that production would persist as tables (tokenized corpus,
@@ -27,6 +34,8 @@ import os
 import re
 import sys
 import time
+
+from oxford_data_pipeline_spark.session import DEFAULT_CPUS
 
 # Every query whose min-of-reps exceeds SLOW_MIN_SEC at sf0.1 must be
 # pinned here WITH the reason it is deliberately expensive — so the
@@ -54,6 +63,13 @@ SLOW_MIN_SEC = 2.5
 # committed grid is regenerated idle and re-committed every round, so
 # a code-caused slowdown shows up in the round-end idle grid (and in
 # SCALING.md), not just in a driver snapshot.
+#
+# One path per configuration: the ratio is only a load estimate when
+# both grids measured the same core count and scale factor (an 8-core
+# grid reads ~1.3x against a 32-core one on an idle box), so a run
+# compares against, and overwrites, only the file of its own
+# configuration (detail_grid).  BENCH_DETAIL.json is the reference
+# configuration's grid; no other configuration can write it.
 LOAD_FACTOR_BAR = 1.2
 # minimum committed-row seconds for a ratio sample (sub-0.2 s rows are
 # scheduler-noise-dominated) and minimum sample count to trust a median
@@ -152,6 +168,31 @@ EXPLAINED_SLOW = {
 }
 
 
+# the scale factor SLOW_MIN_SEC and the committed reference grid are
+# defined at; the reference core count is session.DEFAULT_CPUS
+REFERENCE_SF = 0.1
+BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def detail_grid(
+    cpus: int, sf: float | None, root: str = BENCH_DIR
+) -> tuple[str, dict[str, float]]:
+    """The detail file a run at ``cpus`` cores and primary scale factor
+    ``sf`` writes — BENCH_DETAIL.json for the reference configuration
+    only, otherwise a file named after how the run differs from it —
+    and the per-query minima of the grid previously written there, the
+    run's load-factor reference (empty when there is none yet)."""
+    suffix = "" if cpus == DEFAULT_CPUS else f"_c{cpus}"
+    if sf != REFERENCE_SF:
+        suffix += "_sf-unknown" if sf is None else f"_sf{sf:g}"
+    path = os.path.join(root, f"BENCH_DETAIL{suffix}.json")
+    try:
+        with open(path) as fh:
+            return path, json.load(fh).get("queries_min", {}) or {}
+    except (OSError, ValueError):
+        return path, {}
+
+
 def _read_loadavg() -> list[float] | None:
     try:
         with open("/proc/loadavg") as fh:
@@ -186,17 +227,6 @@ def main() -> None:
     sf_match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(sf_match.group(1)) if sf_match else None
 
-    # snapshot the previously COMMITTED grid before this run overwrites
-    # it — the reference for the load factor below
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    committed_min: dict[str, float] = {}
-    try:
-        with open(detail_path) as fh:
-            committed_min = json.load(fh).get("queries_min", {}) or {}
-    except (OSError, ValueError):
-        pass
     loadavg_start = _read_loadavg()
 
     from oxford_data_pipeline_spark.plans import QUERIES
@@ -209,6 +239,10 @@ def main() -> None:
     from oxford_data_pipeline_spark.sources.catalog import TABLES, load_table
 
     spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
+    # snapshot this configuration's previously committed grid before
+    # this run overwrites it — the reference for the load factor below
+    out_path, committed_min = detail_grid(cpus, sf)
 
     def build_indexes(target_sf_dir: str) -> dict[str, dict]:
         out: dict[str, dict] = {}
@@ -338,6 +372,8 @@ def main() -> None:
               f" {unpinned_slow} — add to EXPLAINED_SLOW with a reason",
               file=sys.stderr)
     detail = {
+        "cpus": cpus,
+        "sf": sf,
         "index_build": index_build,
         "queries_rep1": timings,
         "queries_min": qmin,
@@ -369,7 +405,7 @@ def main() -> None:
         detail["index_build"][sec_dir] = build_indexes(sec_dir)
         detail["queries_secondary"] = run_all(sec_dir, 1)[0]
 
-    with open(detail_path, "w") as fh:
+    with open(out_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
     # The driver keeps only the LAST ~2000 chars of combined output and
@@ -380,7 +416,7 @@ def main() -> None:
     # separators; and budget the per-query dict to the SLOWEST queries
     # that keep the line under the capture window — `value` still sums
     # every query, and the complete rep-1/min/secondary grids are in
-    # the committed BENCH_DETAIL.json.
+    # this configuration's detail file (out_path).
     spark.stop()
 
     def render(qdict: dict[str, float]) -> str:
@@ -403,7 +439,7 @@ def main() -> None:
     if len(shown) < len(timings):
         print(f"bench: stdout line budget {budget}B holds {len(shown)}/"
               f"{len(timings)} queries (slowest first); full grid in"
-              " BENCH_DETAIL.json", file=sys.stderr)
+              f" {os.path.basename(out_path)}", file=sys.stderr)
     print(render(shown))
     sys.stdout.flush()
 

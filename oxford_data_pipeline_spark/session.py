@@ -14,12 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] core count when $SPARK_GRAFT_CPUS is unset; bench.py's
+# reference grid (BENCH_DETAIL.json) is measured at this count.
+DEFAULT_CPUS = 32
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
 
 
 def get_spark(app_name: str = "oxford_data_pipeline_spark") -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

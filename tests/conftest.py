@@ -11,6 +11,14 @@ import duckdb
 import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The suite's one JVM takes its heap cap from SPARK_GRAFT_DRIVER_MEM; the
+# session default (48g) lets it grow past a small host's RAM and be
+# killed mid-run.  Unless set, cap it at a quarter of physical memory,
+# the JVM's own default max-heap share.
+_PHYS_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1024, _PHYS_MB // 4)}m")
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -1040,6 +1040,45 @@ def test_grid_load_factor_detects_uniform_inflation():
     assert bench._grid_load_factor(tiny_inflated, tiny) == 1.0
 
 
+def test_bench_detail_path_is_per_configuration(tmp_path):
+    """Only the reference configuration (sf0.1 at the session's default
+    core count) writes BENCH_DETAIL.json; an 8-core or sf0.01 run
+    writes its own file, and each run's load-factor reference is read
+    from the very file it will write, so grids of different
+    configurations are never compared or overwritten."""
+    import json
+
+    import bench
+    from oxford_data_pipeline_spark.session import DEFAULT_CPUS
+
+    grids = {
+        "BENCH_DETAIL.json": {"q": 1.0},
+        "BENCH_DETAIL_c8.json": {"q": 2.0},
+        "BENCH_DETAIL_sf0.01.json": {"q": 3.0},
+        "BENCH_DETAIL_c8_sf0.01.json": {"q": 4.0},
+    }
+    for name, qmin in grids.items():
+        (tmp_path / name).write_text(json.dumps({"queries_min": qmin}))
+    for cpus, sf, name in (
+        (DEFAULT_CPUS, bench.REFERENCE_SF, "BENCH_DETAIL.json"),
+        (8, 0.1, "BENCH_DETAIL_c8.json"),
+        (DEFAULT_CPUS, 0.01, "BENCH_DETAIL_sf0.01.json"),
+        (8, 0.01, "BENCH_DETAIL_c8_sf0.01.json"),
+    ):
+        path, committed_min = bench.detail_grid(cpus, sf, root=str(tmp_path))
+        assert path == str(tmp_path / name), (cpus, sf, path)
+        assert committed_min == grids[name], (cpus, sf, committed_min)
+    # an unrecognised scale factor is never the reference either
+    path, committed_min = bench.detail_grid(DEFAULT_CPUS, None, root=str(tmp_path))
+    assert os.path.basename(path) != "BENCH_DETAIL.json"
+    assert committed_min == {}
+    # the default root is the committed reference grid next to bench.py
+    path, _ = bench.detail_grid(DEFAULT_CPUS, bench.REFERENCE_SF)
+    assert path == os.path.join(
+        os.path.dirname(os.path.abspath(bench.__file__)), "BENCH_DETAIL.json"
+    )
+
+
 def test_lsh_tier_contract_is_a_guard_not_prose():
     """The LSH candidate tier (recall ~0.4) must NEVER feed a serving
     query directly — its contract is candidate generation where an
