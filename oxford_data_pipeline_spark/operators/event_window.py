@@ -90,31 +90,3 @@ def segment_by_events(
     # `windows` automatically when the trigger side is small.
     return series.join(windows, [*key, bin_col], "inner")
 
-
-def segment_by_events_rangejoin(
-    series: DataFrame,
-    triggers: DataFrame,
-    key: Sequence[str],
-    bin_col: str = "bin",
-    start_col: str = "start_bin",
-    pre: int = 75,
-    post: int = 150,
-) -> DataFrame:
-    """Reference-shaped interval-join variant (for plan comparison only).
-
-    Same output as `segment_by_events(drop_boundary=False)` but expressed
-    as a range predicate; Spark executes key-equality + range residual.
-    Kept for A/B plan testing — the exploded equi-join is the scale path.
-    """
-    key = list(key)
-    cond = None
-    for k in key:
-        c = series[k] == triggers[k]
-        cond = c if cond is None else (cond & c)
-    cond = cond & series[bin_col].between(
-        triggers[start_col] - pre, triggers[start_col] + post
-    )
-    joined = series.join(triggers, cond, "inner")
-    for k in key:
-        joined = joined.drop(triggers[k])
-    return joined.withColumn("t", F.col(bin_col) - F.col(start_col))

@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from oxford_data_pipeline_spark.pipeline.session_pipeline import PipelineConfig
+from oxford_data_pipeline_spark.pipeline.session_pipeline import (
+    PipelineConfig,
+    project,
+    tag_regions,
+)
 from oxford_data_pipeline_spark.operators.event_window import segment_by_events
 from oxford_data_pipeline_spark.plans.memo import bounded_once
 
@@ -38,31 +42,18 @@ def segment_conditions(
 
 
 def cross_condition_projections(
-    segmented_all: DataFrame, sampled: DataFrame, cca_weights: DataFrame
+    segmented_all: DataFrame,
+    sampled: DataFrame,
+    cca_weights: DataFrame,
+    labels: list[str],
 ) -> DataFrame:
     """J7 + M5 — project EVERY condition's z-scored data through the
     reference condition's weights. z-scoring is per (condition,
     session, neuron) as in `cross_trial_type_cca_analysis.py:678-683`."""
-    tagged = segmented_all.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
+    per_condition = cca_weights.withColumn(
+        "trial_type", F.explode(F.array(*[F.lit(label) for label in labels]))
     )
-    stats = tagged.groupBy("trial_type", "session", "neuron_id").agg(
-        F.avg("rate").alias("mu"), F.stddev_samp("rate").alias("sigma")
-    )
-    z = tagged.join(stats, ["trial_type", "session", "neuron_id"]).withColumn(
-        "z",
-        F.when(F.col("sigma") > 0, (F.col("rate") - F.col("mu")) / F.col("sigma"))
-        .otherwise(0.0),
-    )
-    return (
-        z.join(cca_weights, ["session", "neuron_id"])
-        .groupBy(
-            "trial_type", "session", "pair_r1", "pair_r2", "side", "component",
-            "trial_id", "t",
-        )
-        .agg(F.sum(F.col("z") * F.col("weight")).alias("value"))
-    )
+    return project(tag_regions(segmented_all, sampled), per_condition)
 
 
 def session_mean_timecourses(projections: DataFrame) -> DataFrame:
@@ -174,11 +165,14 @@ def run_cross_condition(
 ) -> dict[str, DataFrame]:
     """Entry B end-to-end, given Entry A's sampled neurons + weights."""
     segmented_all = segment_conditions(firing, events, cfg, labels)
-    projections = cross_condition_projections(segmented_all, sampled, cca_weights)
+    projections = cross_condition_projections(
+        segmented_all, sampled, cca_weights, labels
+    )
     # every downstream table reads the time courses: materialize them once
     timecourses = bounded_once(session_mean_timecourses(projections))
     peaks = peak_amplitudes(timecourses)
-    decisions = flip_decisions(timecourses, cfg.trial_type)
+    # read by the aligned stats (written, then counted) and counted itself
+    decisions = bounded_once(flip_decisions(timecourses, cfg.trial_type))
     aligned = aligned_cross_session_stats(timecourses, decisions)
     similarity = condition_similarity(timecourses, cfg.trial_type)
     return {

@@ -1,7 +1,7 @@
 """Entry C figure parity (report layer): the exact tidy tables behind
 the reference's figures, emitted as ready-to-plot CSV artifacts — the
 engine's answer to the matplotlib surface without taking a plotting
-dependency (round-3 verdict stretch item).
+dependency.
 
 Reference figures reproduced as tables:
 - connectivity matrices  `CCA_test_all.py:402-541` (W1 rank-k R² per

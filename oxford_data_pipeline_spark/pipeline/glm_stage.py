@@ -20,10 +20,31 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oxford_data_pipeline_spark.pipeline.session_pipeline import tag_regions
+
 
 def _seed_from(*parts) -> int:
     h = hashlib.md5("|".join(str(p) for p in parts).encode()).hexdigest()
     return int(h[:8], 16)
+
+
+def _design(
+    projections: DataFrame,
+    segmented: DataFrame,
+    sampled: DataFrame,
+    component: int,
+    side: str,
+) -> DataFrame:
+    """J4 — each pair's component-`component` latent on its `side`,
+    joined at every (trial, t) sample with the rates of the sampled
+    neurons of both regions of the pair (tagged as `n_region`)."""
+    latent = projections.filter(
+        (F.col("component") == component) & (F.col("side") == side)
+    ).select("session", "pair_r1", "pair_r2", "trial_id", "t", "value")
+    tagged = tag_regions(segmented, sampled).withColumnRenamed("region", "n_region")
+    return latent.join(tagged, ["session", "trial_id", "t"]).filter(
+        (F.col("n_region") == F.col("pair_r1")) | (F.col("n_region") == F.col("pair_r2"))
+    )
 
 
 def glm_fit(
@@ -39,19 +60,7 @@ def glm_fit(
     coefficient with inference, plus model-level stats repeated."""
     from oxford_data_pipeline_spark.ml.linalg import ols_inference
 
-    latent = projections.filter(
-        (F.col("component") == component) & (F.col("side") == side)
-    ).select("session", "pair_r1", "pair_r2", "trial_id", "t", "value")
-    tagged = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
-    joined = latent.join(
-        tagged.withColumnRenamed("region", "n_region"),
-        ["session", "trial_id", "t"],
-    ).filter(
-        (F.col("n_region") == F.col("pair_r1")) | (F.col("n_region") == F.col("pair_r2"))
-    )
+    joined = _design(projections, segmented, sampled, component, side)
 
     _COLS = ["session", "pair_r1", "pair_r2", "region", "neuron_id", "beta",
              "se", "t_stat", "p_value", "r2", "adj_r2", "aic", "bic", "n_samples"]
@@ -117,18 +126,7 @@ def sensitivity_grid(
     (`Oxford_glm_sensitivity.m:54-55,256-342`)."""
     from oxford_data_pipeline_spark.ml.linalg import ols_inference
 
-    latent = projections.filter(
-        (F.col("component") == component) & (F.col("side") == side)
-    ).select("session", "pair_r1", "pair_r2", "trial_id", "t", "value")
-    tagged = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
-    joined = latent.join(
-        tagged.withColumnRenamed("region", "n_region"), ["session", "trial_id", "t"]
-    ).filter(
-        (F.col("n_region") == F.col("pair_r1")) | (F.col("n_region") == F.col("pair_r2"))
-    )
+    joined = _design(projections, segmented, sampled, component, side)
     pcts = list(pcts)
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -3,7 +3,9 @@
 
 Phase map (reference → here):
 - Phase 2 extract+segment (`extract_session_data_mdl.m` +
-  `segment_mdl_to_trials.m`)      → segment_trials (F1-F3 + J1)
+  `segment_mdl_to_trials.m`)      → segment_trials (F1-F3 + J1),
+                                     tagged once with the sampled
+                                     neurons' regions
 - Phase 3 region grouping (`perform_region_analysis.m`)
                                    → admit_regions (F4/F5/F10) +
                                      sample_neurons (M18) +
@@ -13,23 +15,31 @@ Phase map (reference → here):
 - Phase 5 CCA (`perform_session_cca.m`)  → fit_pair_cca (M1/M2 UDF,
                                            M17 optional shuffle) +
                                            significant_components (W5)
-                                           + project (M5, relational)
+                                           + project (M5 UDF)
 - Phase 6 save (`single_session_oxford_CCA_mdl.m:308-321`)
                                    → sinks.write_partitioned (S5)
 
 Every stage is a DataFrame in, DataFrame out; all sessions process in
 one job, in parallel, with one shuffle per stage boundary.
 
-Three relations are materialized once per pipeline run with
+Four relations are materialized once per pipeline run with
 `plans.memo.bounded_once`, because several outputs and actions read
 each of them and Spark would otherwise re-run their whole lineage for
-every one: the sampled neurons (read by PSTH, both fits, projection and
-the GLM stage) and the two grouped-fit outputs, whose `applyInPandas`
-kernels are the costliest step and feed two tables each. Their sizes
-depend on sessions, regions and components, not on the trial count.
-The segmented samples grow with trials × neurons × window, so they stay
-lazy. Entry B (`cross_condition.run_cross_condition`) materializes its
-per-session time courses the same way.
+every one:
+- the sampled neurons, read by the region pairs, the region tagging and
+  the GLM stage;
+- the tagged samples: the trials segmented once and joined with the
+  sampled neurons' region (null for a unit that was not sampled).
+  PSTH, both fits, the projection and `segmented`, and through it the
+  GLM stage, read this one relation, so nothing downstream segments or
+  tags again. It grows with trials × neurons × window, unlike the
+  others, and is materialized anyway: five or more consumers read it,
+  and the checkpoint's blocks are MEMORY_AND_DISK, so a relation larger
+  than memory spills instead of failing;
+- the two grouped-fit outputs, whose `applyInPandas` kernels are the
+  costliest step and feed two tables each.
+Entry B (`cross_condition.run_cross_condition`) materializes its
+per-session time courses and flip decisions the same way.
 """
 
 from __future__ import annotations
@@ -127,10 +137,11 @@ def sample_neurons(admitted: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def region_pairs(admitted: DataFrame) -> DataFrame:
-    """J3/J6 — unordered pairs of admitted regions per session with
-    canonical (r1 < r2) keys (`perform_region_analysis.m:79-99`)."""
-    regions = admitted.select("session", "region").distinct()
+def region_pairs(neurons: DataFrame) -> DataFrame:
+    """J3/J6 — unordered pairs of the regions in `neurons` (admitted or
+    sampled units) per session with canonical (r1 < r2) keys
+    (`perform_region_analysis.m:79-99`)."""
+    regions = neurons.select("session", "region").distinct()
     a, b = regions.alias("a"), regions.alias("b")
     return a.join(
         b,
@@ -143,20 +154,24 @@ def region_pairs(admitted: DataFrame) -> DataFrame:
     )
 
 
+def tag_regions(segmented: DataFrame, sampled: DataFrame) -> DataFrame:
+    """The segmented samples of the sampled neurons, with their region."""
+    return segmented.join(
+        F.broadcast(sampled.select("session", "neuron_id", "region")),
+        ["session", "neuron_id"],
+    )
+
+
 # ---------------------------------------------------------------------------
 # PSTH (A1)
 # ---------------------------------------------------------------------------
 
 
-def psth_table(segmented: DataFrame, sampled: DataFrame) -> DataFrame:
+def psth_table(tagged: DataFrame) -> DataFrame:
     """A1 — trial-averaged rate ± std per (session, region, neuron, t)
-    (`save_session_results.m:87-106`)."""
-    enriched = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
+    over the region-tagged samples (`save_session_results.m:87-106`)."""
     n = F.count(F.lit(1))
-    return enriched.groupBy("session", "region", "neuron_id", "t").agg(
+    return tagged.groupBy("session", "region", "neuron_id", "t").agg(
         F.avg("rate").alias("mean_rate"),
         F.when(n > 1, F.stddev_samp("rate")).alias("std_rate"),
         n.alias("n_trials"),
@@ -179,16 +194,13 @@ def _matrix(pdf: pd.DataFrame, value_col: str = "rate") -> tuple[np.ndarray, lis
 
 
 def fit_region_pca(
-    segmented: DataFrame, sampled: DataFrame, cfg: PipelineConfig
+    tagged: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """M4 — CV-PCA per (session, region); returns (weights, variance)
-    long tables (`perform_region_pca.m:93-156,201-221`)."""
+    """M4 — CV-PCA per (session, region) of the region-tagged samples;
+    returns (weights, variance) long tables
+    (`perform_region_pca.m:93-156,201-221`)."""
     from oxford_data_pipeline_spark.ml.linalg import cv_pca
 
-    data = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
     k, folds = cfg.n_components, cfg.cv_folds
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -215,7 +227,7 @@ def fit_region_pca(
         )
 
     # both tables below read this one fit output
-    out = bounded_once(data.groupBy("session", "region").applyInPandas(
+    out = bounded_once(tagged.groupBy("session", "region").applyInPandas(
         fit,
         schema="session string, region string, neuron_id int, component int,"
         " weight double, explained double, cumulative double",
@@ -231,16 +243,19 @@ def fit_pair_cca(
     pairs: DataFrame,
     cfg: PipelineConfig,
 ) -> tuple[DataFrame, DataFrame]:
-    """M1/M2 — CV-CCA per (session, pair): contiguous folds over the
-    (trial, t)-ordered samples (W6), optional M17 seeded permutation of
-    the Y-side trials. Returns (cca_r2, cca_weights) long tables
-    (`perform_session_cca.m:94-351`)."""
+    """`fit_tagged_pair_cca` over untagged segmented samples."""
+    return fit_tagged_pair_cca(tag_regions(segmented, sampled), pairs, cfg)
+
+
+def fit_tagged_pair_cca(
+    tagged: DataFrame, pairs: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """M1/M2 — CV-CCA per (session, pair) of the region-tagged samples:
+    contiguous folds over the (trial, t)-ordered samples (W6), optional
+    M17 seeded permutation of the Y-side trials. Returns (cca_r2,
+    cca_weights) long tables (`perform_session_cca.m:94-351`)."""
     from oxford_data_pipeline_spark.ml.linalg import cv_cca
 
-    tagged = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
     sides = tagged.join(
         F.broadcast(pairs),
         (tagged.session == pairs.session)
@@ -344,36 +359,76 @@ def significant_components(cca_r2: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Canonical projection (M5) — pure relational matmul
+# Canonical projection (M5)
 # ---------------------------------------------------------------------------
 
+_PROJ_COLS = ["pair_r1", "pair_r2", "side", "component", "trial_id", "t", "value"]
 
-def project(
-    segmented: DataFrame, sampled: DataFrame, cca_weights: DataFrame
-) -> DataFrame:
-    """M5 — `proj = zscore(X) @ W` per (session, pair, side):
-    z-score per (session, neuron) over the segmented samples, join the
-    weights on (session, neuron), sum products per (trial, t, comp)
-    (`perform_session_cca.m:402-464`). No UDF, one shuffle."""
-    tagged = segmented.join(
-        F.broadcast(sampled.select("session", "neuron_id", "region")),
-        ["session", "neuron_id"],
-    )
-    stats = tagged.groupBy("session", "neuron_id").agg(
-        F.avg("rate").alias("mu"), F.stddev_samp("rate").alias("sigma")
-    )
-    z = (
-        tagged.join(stats, ["session", "neuron_id"])
-        .withColumn(
-            "z",
-            F.when(F.col("sigma") > 0, (F.col("rate") - F.col("mu")) / F.col("sigma"))
-            .otherwise(0.0),
-        )
-    )
+
+def _project_group(samples: pd.DataFrame, weights: pd.DataFrame) -> pd.DataFrame:
+    """`zscore(X) @ W` for one (condition, session): each neuron is
+    z-scored over its own samples (ddof=1; σ of 0 or undefined gives
+    z = 0), absent samples are zeros of X, and each (pair, side) emits
+    the (trial, t) rows where at least one of its neurons has a sample."""
+    if samples.empty or weights.empty:
+        return pd.DataFrame(columns=_PROJ_COLS)
+    by_neuron = samples.groupby("neuron_id")["rate"]
+    mu = by_neuron.transform("mean").to_numpy()
+    sd = by_neuron.transform("std").to_numpy()
+    ok = sd > 0
+    z = np.where(ok, (samples["rate"].to_numpy() - mu) / np.where(ok, sd, 1.0), 0.0)
+    rows, index = pd.factorize(pd.MultiIndex.from_frame(samples[["trial_id", "t"]]))
+    cols, neurons = pd.factorize(samples["neuron_id"])
+    Z = np.zeros((len(index), len(neurons)))
+    np.add.at(Z, (rows, cols), z)
+    present = np.zeros(Z.shape, dtype=bool)
+    present[rows, cols] = True
+    trial_ids = index.get_level_values(0).to_numpy()
+    ts = index.get_level_values(1).to_numpy()
+    out = []
+    for (r1, r2, side), w in weights.groupby(["pair_r1", "pair_r2", "side"]):
+        wm = w.pivot(index="neuron_id", columns="component", values="weight")
+        idx = pd.Index(neurons).get_indexer(wm.index)
+        seen = idx >= 0
+        idx, W = idx[seen], wm.to_numpy()[seen]
+        hit = present[:, idx].any(axis=1)
+        V = Z[np.ix_(hit, idx)] @ W
+        k = W.shape[1]
+        out.append(pd.DataFrame({
+            "pair_r1": r1, "pair_r2": r2, "side": side,
+            "component": np.tile(wm.columns.to_numpy(), len(V)),
+            "trial_id": np.repeat(trial_ids[hit], k),
+            "t": np.repeat(ts[hit], k),
+            "value": V.ravel(),
+        }))
+    return pd.concat(out, ignore_index=True) if out else pd.DataFrame(columns=_PROJ_COLS)
+
+
+def project(samples: DataFrame, cca_weights: DataFrame) -> DataFrame:
+    """M5 — `proj = zscore(X) @ W` per (trial_type, session): one grouped
+    pandas kernel over the region-tagged samples and the CCA weights,
+    both keyed by (trial_type, session); z-scoring is per (condition,
+    session, neuron) (`perform_session_cca.m:402-464`,
+    `cross_trial_type_cca_analysis.py:678-683`)."""
+    keys = ["trial_type", "session"]
+
+    def kernel(key, pdf: pd.DataFrame, wdf: pd.DataFrame) -> pd.DataFrame:
+        out = _project_group(pdf, wdf)
+        out.insert(0, "trial_type", key[0])
+        out.insert(1, "session", key[1])
+        return out
+
     return (
-        z.join(cca_weights, ["session", "neuron_id"])
-        .groupBy("session", "pair_r1", "pair_r2", "side", "component", "trial_id", "t")
-        .agg(F.sum(F.col("z") * F.col("weight")).alias("value"))
+        samples.select(*keys, "trial_id", "t", "neuron_id", "rate").groupBy(*keys)
+        .cogroup(cca_weights.select(
+            *keys, "pair_r1", "pair_r2", "side", "neuron_id", "component", "weight",
+        ).groupBy(*keys))
+        .applyInPandas(
+            kernel,
+            schema="trial_type string, session string, pair_r1 string,"
+            " pair_r2 string, side string, component int, trial_id int, t int,"
+            " value double",
+        )
     )
 
 
@@ -405,15 +460,25 @@ def run_session_pipeline(
 ) -> dict[str, DataFrame]:
     """Entry A end-to-end for ALL sessions in one job."""
     cfg = cfg or PipelineConfig()
-    segmented = segment_trials(firing, events, cfg)
     admitted = admit_regions(neurons, cfg)
     sampled = bounded_once(sample_neurons(admitted, cfg))
-    pairs = region_pairs(admitted)
-    psth = psth_table(segmented, sampled)
-    pca_weights, pca_variance = fit_region_pca(segmented, sampled, cfg)
-    cca_r2, cca_weights = fit_pair_cca(segmented, sampled, pairs, cfg)
+    # region pairs from the sampled units: with target_neurons >= 1 every
+    # admitted region keeps a sampled unit, and admission does not run again
+    pairs = region_pairs(sampled)
+    samples = bounded_once(segment_trials(firing, events, cfg).join(
+        F.broadcast(sampled.select("session", "neuron_id", "region")),
+        ["session", "neuron_id"], "left",
+    ))
+    segmented = samples.select("session", "trial_id", "neuron_id", "t", "rate")
+    tagged = samples.filter(F.col("region").isNotNull())
+    psth = psth_table(tagged)
+    pca_weights, pca_variance = fit_region_pca(tagged, cfg)
+    cca_r2, cca_weights = fit_tagged_pair_cca(tagged, pairs, cfg)
     signif = significant_components(cca_r2, cfg)
-    projections = project(segmented, sampled, cca_weights)
+    condition = F.lit(cfg.trial_type).alias("trial_type")
+    projections = project(
+        tagged.select("*", condition), cca_weights.select("*", condition)
+    ).drop("trial_type")
     proj_avg = trial_averaged_projection(projections)
     return {
         "segmented": segmented,

@@ -38,11 +38,16 @@ def bounded_once(df: DataFrame) -> DataFrame:
     (which ``session.get_spark`` turns on) that runs every shuffle and
     broadcast stage below it at once, at construction; only the final
     stage, the one that yields the checkpointed rows, waits for the
-    first action.  So use it on relations whose size does not grow with
-    the input (fits, per-group summaries, sampled keys), and expect a
-    caller that builds the plan without consuming it to pay for those
-    stages.  Nothing survives the run and nothing is keyed on the input
-    path."""
+    first action.  Expect a caller that builds the plan without
+    consuming it to pay for those stages.
+
+    The natural candidates are relations whose size does not grow with
+    the input (fits, per-group summaries, sampled keys): holding them
+    costs little.  A relation that grows with the input is worth it only
+    when many consumers read it; the Oxford pipeline's tagged trial
+    samples are one, read by five or more tables, and MEMORY_AND_DISK
+    lets such blocks spill rather than fail.  Nothing survives the run
+    and nothing is keyed on the input path."""
     return df.localCheckpoint(eager=False)
 
 

@@ -401,3 +401,18 @@ def test_oxford_grouped_fits_run_once(spark, domain_fixtures, entry_a):
         assert "FlatMapGroupsInPandas" not in plan, f"{name} re-runs a fit:\n{plan}"
         if name in entry_b:
             assert "Generate" not in plan, f"{name} re-segments:\n{plan}"
+
+
+def test_oxford_segments_once(spark, entry_a):
+    """Entry A segments the trials once and every consumer reads that one
+    tagged relation: the executed plans of its PSTH, PCA variance, CV-R²
+    and projection tables, and of the GLM fit over its outputs, hold no
+    Generate node (the trial-window explode), so none re-segments."""
+    from oxford_data_pipeline_spark.pipeline.glm_stage import glm_fit
+
+    _, a = entry_a
+    tables = {k: a[k] for k in ("psth", "pca_variance", "cca_r2", "projections")}
+    tables["glm"] = glm_fit(a["projections"], a["segmented"], a["sampled_neurons"])
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Generate" not in plan, f"{name} re-segments:\n{plan}"
