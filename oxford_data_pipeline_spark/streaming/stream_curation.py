@@ -30,12 +30,19 @@ shares the source files, each query keeps its own checkpoint — or a
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.plans.quality import (
     with_c4_features,
     with_pii_features,
+)
+from oxford_data_pipeline_spark.streaming.maintain import (
+    SUM,
+    maintenance_stream,
+    merge_state,
 )
 from oxford_data_pipeline_spark.streaming.stream_neardup import neardup_stream
 
@@ -87,51 +94,26 @@ def quarantine_stream(stream: DataFrame) -> DataFrame:
 # micro-batch folds into its own per-host counts via the SAME
 # `host_counts` builder the batch query uses (URL normalization
 # included — scan-local, no state store) and merges into the
-# maintained table by addition.  The maintained relation is |hosts|
-# rows regardless of corpus size; shares/mix weights derive from it at
-# read time.  Stream-merged counts proven equal to batch-built in
-# tests/test_sinks_streaming.py.
-from collections.abc import Callable  # noqa: E402
+# maintained table by `maintain.merge_state` with the SUM monoid.  The
+# maintained relation is |hosts| rows regardless of corpus size;
+# shares/mix weights derive from it at read time.  Stream-merged
+# counts proven equal to batch-built in tests/test_sinks_streaming.py.
 
 
 def merge_host_counts(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """counts ⊕ counts: full-outer on host, both tallies added —
-    associative + commutative, so shard and batch order never
-    matter."""
-    m = maintained.select(
-        "host",
-        F.col("n_docs").alias("nd_a"),
-        F.col("n_chars").alias("nc_a"),
-    )
-    d = delta.select(
-        "host",
-        F.col("n_docs").alias("nd_b"),
-        F.col("n_chars").alias("nc_b"),
-    )
-    return m.join(d, "host", "full_outer").select(
-        "host",
-        (F.coalesce(F.col("nd_a"), F.lit(0)) + F.coalesce(F.col("nd_b"), F.lit(0)))
-        .alias("n_docs"),
-        (F.coalesce(F.col("nc_a"), F.lit(0)) + F.coalesce(F.col("nc_b"), F.lit(0)))
-        .alias("n_chars"),
+    """counts ⊕ counts: `merge_state` on host, both tallies summed."""
+    return merge_state(
+        maintained, delta, ["host"], {"n_docs": SUM, "n_chars": SUM}
     )
 
 
 def host_mix_maintenance_stream(
     docs: DataFrame, sink: Callable[[DataFrame, int], None]
 ):
-    """Start a foreachBatch maintenance query: each micro-batch of
-    (doc_id, n_chars, url) rows becomes a per-host count delta handed
-    to `sink`, which merges it into the maintained table (with
-    `merge_host_counts`, or any sum-on-conflict upsert).  Returns the
-    StreamingQuery; caller controls trigger/termination."""
+    """Start the maintenance query (`maintenance_stream`): each
+    micro-batch of (doc_id, n_chars, url) rows becomes a per-host count
+    delta handed to `sink`, which merges it into the maintained table
+    (with `merge_host_counts`, or any sum-on-conflict upsert)."""
     from oxford_data_pipeline_spark.plans.curation import host_counts
 
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(host_counts(batch), batch_id)
-
-    return (
-        docs.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return maintenance_stream(docs, host_counts, sink)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.operators.textops import normalized
+from oxford_data_pipeline_spark.streaming.maintain import maintenance_stream
 
 
 def fingerprinted(stream: DataFrame) -> DataFrame:
@@ -74,10 +75,9 @@ def url_dedup_stream(
 
     `blocklist` (a small batch relation with a `host` column — the
     `cur_domain_blocklist` admission gate) is broadcast-anti-joined on
-    the normalized host BEFORE the dedup state store, the round-9
-    verdict item 7 fix: blocked hosts must never be admitted OR enter
-    state — the batch twin drops them before any content processing,
-    and the stream now does the same."""
+    the normalized host BEFORE the dedup state store: blocked hosts
+    must never be admitted OR enter state — the batch twin drops them
+    before any content processing, and the stream does the same."""
     from oxford_data_pipeline_spark.operators.urlops import normalize_urls
 
     normed = normalize_urls(stream, url_col=url_col)
@@ -108,9 +108,8 @@ def _url_key(id_col: str = "doc_id"):
 # --------------------------------------------------------------------------
 # `url_dedup_stream` keeps ONE representative per normalized URL, but
 # within a micro-batch Spark's dropDuplicates keeps an ARBITRARY one —
-# not the batch keep-rule (min doc_id, `dedup_url_survivors`).  The
-# round-9 verdict flagged that the docstring promised "applies on
-# compaction" with nothing executing it.  These three functions close
+# not the batch keep-rule (min doc_id, `dedup_url_survivors`), so
+# compaction must execute that rule.  These three functions close
 # the loop the way the host-count maintainer does (stream_curation):
 # a per-batch keeper DELTA (min-doc_id per key — associative), a
 # merge that folds deltas into the maintained keeper relation, and
@@ -182,18 +181,11 @@ def merge_url_keepers(maintained: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def url_keeper_maintenance_stream(stream: DataFrame, sink, url_col: str = "source"):
-    """foreachBatch maintainer for the keeper relation (the
-    `host_mix_maintenance_stream` convention): each micro-batch
+    """Keeper maintenance query (`maintenance_stream`): each micro-batch
     becomes a keeper delta handed to `sink(delta, batch_id)`, which
     merges it with `merge_url_keepers`."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(url_keeper_delta(batch, url_col=url_col), batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
+    return maintenance_stream(
+        stream, lambda batch: url_keeper_delta(batch, url_col=url_col), sink
     )
 
 
@@ -317,18 +309,13 @@ def merge_paragraph_keepers(maintained: DataFrame, delta: DataFrame) -> DataFram
 
 def paragraph_keeper_maintenance_stream(stream: DataFrame, sink,
                                         min_tokens: int = 3):
-    """foreachBatch maintainer for the paragraph keeper relation (the
-    host-count convention): each micro-batch becomes a keeper delta
-    handed to `sink(delta, batch_id)`, merged with
-    `merge_paragraph_keepers`."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(paragraph_keeper_delta(batch, min_tokens=min_tokens), batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
+    """Paragraph keeper maintenance query (`maintenance_stream`): each
+    micro-batch becomes a keeper delta handed to `sink(delta,
+    batch_id)`, merged with `merge_paragraph_keepers`."""
+    return maintenance_stream(
+        stream,
+        lambda batch: paragraph_keeper_delta(batch, min_tokens=min_tokens),
+        sink,
     )
 
 
@@ -377,16 +364,9 @@ def content_keeper_delta(batch: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def content_keeper_maintenance_stream(stream: DataFrame, sink):
-    """foreachBatch maintainer for the content keeper relation."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(content_keeper_delta(batch), batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Content keeper maintenance query (`maintenance_stream`), merged
+    with `merge_content_keepers`."""
+    return maintenance_stream(stream, content_keeper_delta, sink)
 
 
 def merge_content_keepers(maintained: DataFrame, delta: DataFrame) -> DataFrame:

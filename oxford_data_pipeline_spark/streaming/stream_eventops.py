@@ -50,6 +50,7 @@ from oxford_data_pipeline_spark.functions.compat import (
     EPOCH_DAY_SQL,
     EPOCH_WEEK_SQL,
 )
+from oxford_data_pipeline_spark.streaming.maintain import MAX, MIN, SUM, merge_state
 
 TRANSITION_SCHEMA = "from_state string, to_state string"
 _TRANS_STATE = "last_ts long, last_id long, last_type string"
@@ -205,19 +206,9 @@ def dau_register_deltas(events: DataFrame) -> DataFrame:
 
 
 def merge_dau_registers(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """registers ⊕ registers: full-outer on (week, day, bucket),
+    """registers ⊕ registers: `merge_state` on (week, day, bucket),
     bucket-wise max — the sketch merge operator."""
-    m = maintained.withColumnRenamed("mreg", "mreg_a")
-    d = delta.withColumnRenamed("mreg", "mreg_b")
-    return m.join(d, ["week", "day", "bucket"], "full_outer").select(
-        "week",
-        "day",
-        "bucket",
-        F.greatest(
-            F.coalesce(F.col("mreg_a"), F.lit(0)),
-            F.coalesce(F.col("mreg_b"), F.lit(0)),
-        ).cast("int").alias("mreg"),
-    )
+    return merge_state(maintained, delta, ["week", "day", "bucket"], {"mreg": MAX})
 
 
 # --------------------------------------------------------------------------
@@ -249,23 +240,14 @@ def merge_retention_state(
     maintained: tuple[DataFrame, DataFrame] | None,
     delta: tuple[DataFrame, DataFrame],
 ) -> tuple[DataFrame, DataFrame]:
-    """State ⊕ delta: first-week keeper merge (full-outer MIN on
-    user_id) and activity-set union-distinct."""
+    """State ⊕ delta: first-week keeper merge (`merge_state` on
+    user_id, MIN) and activity-set union-distinct."""
     if maintained is None:
         return delta
     mf, ma = maintained
     df_, da = delta
-    m = mf.withColumnRenamed("cohort_week", "cw_a")
-    d = df_.withColumnRenamed("cohort_week", "cw_b")
-    firstw = m.join(d, "user_id", "full_outer").select(
-        "user_id",
-        F.least(
-            F.coalesce(F.col("cw_a"), F.col("cw_b")),
-            F.coalesce(F.col("cw_b"), F.col("cw_a")),
-        ).alias("cohort_week"),
-    )
-    active = ma.unionByName(da).distinct()
-    return firstw, active
+    firstw = merge_state(mf, df_, ["user_id"], {"cohort_week": MIN})
+    return firstw, ma.unionByName(da).distinct()
 
 
 def retention_matrix_from(
@@ -304,7 +286,7 @@ def retention_matrix_from(
 # The anomaly query's only corpus-sized step is the (event_type, day)
 # count rollup — a trivially mergeable relation (merge = sum,
 # associative + commutative), so the online half maintains exactly
-# that: micro-batch count deltas folded in by full-outer ADD.  The
+# that: micro-batch count deltas folded in by `merge_state` SUM.  The
 # maintained relation is |types| x |days| rows whatever the event
 # volume; the z-score pass derives at read time via the SAME
 # `anomaly_scores_from` tail as the batch plan.
@@ -319,18 +301,9 @@ def daily_count_deltas(events: DataFrame) -> DataFrame:
 
 
 def merge_daily_counts(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """counts ⊕ counts: full-outer on (event_type, day), additive
-    merge — late/out-of-order events simply add to their day."""
-    m = maintained.withColumnRenamed("n", "n_a")
-    d = delta.withColumnRenamed("n", "n_b")
-    return m.join(d, ["event_type", "day"], "full_outer").select(
-        "event_type",
-        "day",
-        (
-            F.coalesce(F.col("n_a"), F.lit(0))
-            + F.coalesce(F.col("n_b"), F.lit(0))
-        ).alias("n"),
-    )
+    """counts ⊕ counts: `merge_state` on (event_type, day), SUM —
+    late/out-of-order events simply add to their day."""
+    return merge_state(maintained, delta, ["event_type", "day"], {"n": SUM})
 
 
 # --------------------------------------------------------------------------
@@ -356,19 +329,9 @@ def value_hist_deltas(events: DataFrame) -> DataFrame:
 
 
 def merge_value_hists(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """histogram ⊕ histogram: full-outer on (day, week, bucket),
-    additive merge."""
-    m = maintained.withColumnRenamed("n", "n_a")
-    d = delta.withColumnRenamed("n", "n_b")
-    return m.join(d, ["day", "week", "bucket"], "full_outer").select(
-        "day",
-        "week",
-        "bucket",
-        (
-            F.coalesce(F.col("n_a"), F.lit(0))
-            + F.coalesce(F.col("n_b"), F.lit(0))
-        ).alias("n"),
-    )
+    """histogram ⊕ histogram: `merge_state` on (day, week, bucket),
+    SUM."""
+    return merge_state(maintained, delta, ["day", "week", "bucket"], {"n": SUM})
 
 
 def weekly_hist_report_from(daily: DataFrame) -> DataFrame:
@@ -574,19 +537,9 @@ def path_triple_stream(stream: DataFrame) -> DataFrame:
 
 
 def merge_path_counts(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """counts ⊕ counts: full-outer on the (s1, s2, s3) triple key,
-    additive merge — the maintained relation stays <= |types|^3 rows."""
-    m = maintained.withColumnRenamed("n_paths", "n_a")
-    d = delta.withColumnRenamed("n_paths", "n_b")
-    return m.join(d, ["s1", "s2", "s3"], "full_outer").select(
-        "s1",
-        "s2",
-        "s3",
-        (
-            F.coalesce(F.col("n_a"), F.lit(0))
-            + F.coalesce(F.col("n_b"), F.lit(0))
-        ).alias("n_paths"),
-    )
+    """counts ⊕ counts: `merge_state` on the (s1, s2, s3) triple key,
+    SUM — the maintained relation stays <= |types|^3 rows."""
+    return merge_state(maintained, delta, ["s1", "s2", "s3"], {"n_paths": SUM})
 
 
 # --------------------------------------------------------------------------

@@ -5,8 +5,9 @@ CMS counters are a pure map-side-combinable SUM, so the online
 maintainer is trivial arithmetic: each arriving micro-batch of
 documents is tokenized, folded into its own (k, pos, cnt) counter
 relation by the SAME `cms_counters` builder the batch query uses, and
-ADDED into the maintained counters table (merge-by-addition is the
-sketch's defining algebraic property, asserted in
+ADDED into the maintained counters table by `maintain.merge_state`
+with the SUM monoid (merge-by-addition is the sketch's defining
+algebraic property, asserted in
 tests/test_curation_eventops.py::test_cms_counters_mergeable).
 Ranking/estimation stays a batch read over the maintained table; the
 stream only ever touches counter rows — K x width of them, constant
@@ -23,6 +24,12 @@ from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.operators.textops import normalized, tokens
 from oxford_data_pipeline_spark.plans.curation import cms_counters
+from oxford_data_pipeline_spark.streaming.maintain import (
+    MAX,
+    SUM,
+    maintenance_stream,
+    merge_state,
+)
 
 
 def batch_counters(docs: DataFrame) -> DataFrame:
@@ -37,38 +44,19 @@ def batch_counters(docs: DataFrame) -> DataFrame:
 
 
 def merge_counters(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """counters ⊕ counters: full-outer on (k, pos), cnt added — the
-    sketch's merge operator (associative + commutative, so shard and
-    batch order never matter)."""
-    m = maintained.withColumnRenamed("cnt", "cnt_a")
-    d = delta.withColumnRenamed("cnt", "cnt_b")
-    return m.join(d, ["k", "pos"], "full_outer").select(
-        "k",
-        "pos",
-        (
-            F.coalesce(F.col("cnt_a"), F.lit(0))
-            + F.coalesce(F.col("cnt_b"), F.lit(0))
-        ).alias("cnt"),
-    )
+    """counters ⊕ counters: `merge_state` on (k, pos), cnt summed — the
+    sketch's merge operator."""
+    return merge_state(maintained, delta, ["k", "pos"], {"cnt": SUM})
 
 
 def cms_maintenance_stream(
     docs: DataFrame, sink: Callable[[DataFrame, int], None]
 ):
-    """Start a foreachBatch maintenance query: each micro-batch of
-    (doc_id, text) rows becomes a counter-delta relation handed to
-    `sink`, which merges it into the maintained counters table (with
-    `merge_counters`, or any sum-on-conflict upsert).  Returns the
-    StreamingQuery; caller controls trigger/termination."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(batch_counters(batch), batch_id)
-
-    return (
-        docs.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Start the maintenance query (`maintenance_stream`): each
+    micro-batch of (doc_id, text) rows becomes a counter-delta relation
+    handed to `sink`, which merges it into the maintained counters
+    table (with `merge_counters`, or any sum-on-conflict upsert)."""
+    return maintenance_stream(docs, batch_counters, sink)
 
 
 # --------------------------------------------------------------------------
@@ -86,39 +74,22 @@ def batch_registers(docs: DataFrame) -> DataFrame:
 
 
 def merge_registers(maintained: DataFrame, delta: DataFrame) -> DataFrame:
-    """registers ⊕ registers: full-outer on bucket, mreg maxed — the
-    HLL merge operator (associative, commutative AND idempotent, so
-    shard order, batch order and replays all collapse to the same
-    sketch — strictly stronger delivery tolerance than the CMS sum,
-    which must not double-count)."""
-    m = maintained.withColumnRenamed("mreg", "mreg_a")
-    d = delta.withColumnRenamed("mreg", "mreg_b")
-    return m.join(d, ["bucket"], "full_outer").select(
-        "bucket",
-        F.greatest(
-            F.coalesce(F.col("mreg_a"), F.lit(0)),
-            F.coalesce(F.col("mreg_b"), F.lit(0)),
-        ).cast("int").alias("mreg"),
-    )
+    """registers ⊕ registers: `merge_state` on bucket, mreg maxed — the
+    HLL merge operator.  Idempotent too, so replays collapse to the
+    same sketch: strictly stronger delivery tolerance than the CMS
+    sum, which must not double-count."""
+    return merge_state(maintained, delta, ["bucket"], {"mreg": MAX})
 
 
 def hll_maintenance_stream(
     docs: DataFrame, sink: Callable[[DataFrame, int], None]
 ):
-    """Start a foreachBatch maintenance query: each micro-batch of
-    (doc_id, text) rows becomes a register-delta relation handed to
-    `sink`, which max-merges it into the maintained register table
-    (with `merge_registers`, or any greatest-on-conflict upsert).
-    Returns the StreamingQuery; caller controls trigger/termination."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(batch_registers(batch), batch_id)
-
-    return (
-        docs.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Start the maintenance query (`maintenance_stream`): each
+    micro-batch of (doc_id, text) rows becomes a register-delta
+    relation handed to `sink`, which max-merges it into the maintained
+    register table (with `merge_registers`, or any greatest-on-conflict
+    upsert)."""
+    return maintenance_stream(docs, batch_registers, sink)
 
 
 # --------------------------------------------------------------------------
@@ -156,15 +127,7 @@ def merge_samples(maintained: DataFrame, delta: DataFrame, k: int = 20) -> DataF
 def sample_maintenance_stream(
     docs: DataFrame, sink: Callable[[DataFrame, int], None], k: int = 20
 ):
-    """Start a foreachBatch maintenance query: each micro-batch's local
-    top-k sample is handed to `sink`, which merges it into the
-    maintained reservoir with `merge_samples`."""
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(batch_sample(batch, k), batch_id)
-
-    return (
-        docs.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Start the maintenance query (`maintenance_stream`): each
+    micro-batch's local top-k sample is handed to `sink`, which merges
+    it into the maintained reservoir with `merge_samples`."""
+    return maintenance_stream(docs, lambda batch: batch_sample(batch, k), sink)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.operators.textops import normalized, tokens
 from oxford_data_pipeline_spark.plans.retrieval import bm25_rank
+from oxford_data_pipeline_spark.streaming.maintain import maintenance_stream
 
 
 def query_terms(queries: DataFrame) -> DataFrame:
@@ -46,17 +47,10 @@ def bm25_serving_stream(
     sink: Callable[[DataFrame, int], None],
     topk: int = 10,
 ):
-    """Start a foreachBatch serving query: each micro-batch of
-    (query_id, text) rows is tokenized, ranked by `bm25_rank` against
-    the static `tf`/`docs` index relations, and handed to `sink`
-    (e.g. append to the results table).  Returns the StreamingQuery;
-    caller controls trigger/termination."""
-
-    def score_batch(batch: DataFrame, batch_id: int) -> None:
-        sink(bm25_rank(query_terms(batch), tf, docs, topk), batch_id)
-
-    return (
-        queries.writeStream.foreachBatch(score_batch)
-        .trigger(availableNow=True)
-        .start()
+    """Start the serving query (`maintenance_stream`): each micro-batch
+    of (query_id, text) rows is tokenized, ranked by `bm25_rank`
+    against the static `tf`/`docs` index relations, and handed to
+    `sink` (e.g. append to the results table)."""
+    return maintenance_stream(
+        queries, lambda batch: bm25_rank(query_terms(batch), tf, docs, topk), sink
     )

@@ -5,8 +5,7 @@ Usage::
     python scripts/stream_explain_capture.py OUTDIR [SUFFIX]
 
 Writes ``OUTDIR/stream_<path>_<SUFFIX>.txt`` for each maintenance path
-(r14 verdict item 5 / r15 item 5: the 14 streaming modules had zero
-committed plans).  Register/state maintainers are captured as their
+of the streaming modules.  Register/state maintainers are captured as their
 batch shape (delta + merge + read-time derivation over the events
 table split at its midpoint — exactly what `scale10_probe --streams`
 times); stateless document/embedding transforms are captured applied
@@ -18,14 +17,22 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    outdir = sys.argv[1] if len(sys.argv) > 1 else "plans/r15"
+    if len(sys.argv) < 2:
+        sys.exit("usage: python scripts/stream_explain_capture.py OUTDIR [SUFFIX]")
+    outdir = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "r15"
     os.makedirs(outdir, exist_ok=True)
+    with tempfile.TemporaryDirectory() as stream_src:
+        capture(outdir, suffix, stream_src)
+
+
+def capture(outdir: str, suffix: str, stream_src: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pyspark.sql import functions as F
@@ -48,12 +55,8 @@ def main() -> None:
     )
     embs = load_table(spark, sf_dir, "embeddings")
     # the stateful twins (applyInPandasWithState) only analyze against
-    # a STREAMING source: dump the events once and readStream them
-    import tempfile
-
-    stream_src = os.path.join(tempfile.gettempdir(), "r15_stream_src")
-    if not os.path.exists(stream_src):
-        ev.write.mode("overwrite").parquet(stream_src)
+    # a STREAMING source: dump this scale's events and readStream them
+    ev.write.mode("overwrite").parquet(stream_src)
     ev_stream = (
         spark.readStream
         .schema("event_id long, ts long, user_id long, event_type string,"

@@ -6,6 +6,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.sources.catalog import load_table
@@ -2547,3 +2548,123 @@ def test_streaming_retention_state_serves_growth_accounting(spark):
         key=lambda t: t[0],
     )
     assert derived == batch and len(derived) > 0
+
+
+# --------------------------------------------------------------------------
+# Monoid laws of the maintained-state merges
+# --------------------------------------------------------------------------
+# (module, merge, state schema, number of key columns, law).  The law
+# names the Python fold the merge must equal, per key: "sum", "max" or
+# "min" of each value column, or "keeper<n>": the row whose first n
+# value columns are smallest wins, the rest travel with it.
+_MERGE_LAWS = [
+    ("stream_eventops", "merge_daily_counts",
+     "event_type string, day long, n long", 2, "sum"),
+    ("stream_eventops", "merge_value_hists",
+     "day long, week long, bucket int, n long", 3, "sum"),
+    ("stream_eventops", "merge_path_counts",
+     "s1 string, s2 string, s3 string, n_paths long", 3, "sum"),
+    ("stream_eventops", "merge_dau_registers",
+     "week long, day long, bucket int, mreg int", 3, "max"),
+    ("stream_eventops", "merge_retention_state",
+     "user_id long, cohort_week long", 1, "min"),
+    ("stream_profile", "merge_counters", "k int, pos string, cnt long", 2, "sum"),
+    ("stream_profile", "merge_registers", "bucket int, mreg int", 1, "max"),
+    ("stream_curation", "merge_host_counts",
+     "host string, n_docs long, n_chars long", 1, "sum"),
+    ("stream_dedup", "merge_url_keepers",
+     "_url_key string, doc_id long, host string, norm_url string, n_chars long",
+     1, "keeper1"),
+    ("stream_dedup", "merge_content_keepers",
+     "_fp string, doc_id long, n_chars long", 1, "keeper1"),
+    ("stream_dedup", "merge_paragraph_keepers",
+     "_pfp string, doc_id long, para_idx int, para string", 1, "keeper2"),
+]
+# key index -> value seed.  Key 2 is in all three states, keys 1 and 3
+# in two, keys 0 and 4 in one; for "keeper2" key 2 ties on doc_id
+# between A and C, so para_idx decides.
+_LAW_A, _LAW_B, _LAW_C = {0: 3, 1: 5, 2: 7}, {1: 2, 2: 9, 3: 4}, {2: 6, 3: 1, 4: 8}
+
+
+def _law_row(types, n_keys, law, i, v):
+    keys = tuple(f"k{i}" if t == "string" else i for t in types[:n_keys])
+    if not law.startswith("keeper"):
+        return keys + tuple(v * (j + 1) for j in range(len(types) - n_keys))
+    n_order = int(law[-1])
+    order = (v,) if n_order == 1 else (v // 2, v % 2)
+    attrs = tuple(
+        f"a{v}" if t == "string" else v * 10 for t in types[n_keys + n_order:]
+    )
+    return keys + order + attrs
+
+
+def _law_fold(name, law, n_keys, *states):
+    out = {}
+    for rows in states:
+        for row in rows:
+            k, new = row[:n_keys], row[n_keys:]
+            old = out.get(k)
+            if old is None:
+                out[k] = new
+            elif law == "sum":
+                out[k] = tuple(x + y for x, y in zip(old, new))
+            elif law in ("max", "min"):
+                pick = max if law == "max" else min
+                out[k] = tuple(pick(x, y) for x, y in zip(old, new))
+            else:
+                n_order = int(law[-1])
+                out[k] = min(old, new, key=lambda r: r[:n_order])
+    folded = sorted(k + v for k, v in out.items())
+    if name == "merge_retention_state":
+        return folded, sorted({r for rows in states for r in rows})
+    return folded
+
+
+@pytest.mark.parametrize(
+    "module,name,ddl,n_keys,law", _MERGE_LAWS, ids=[c[1] for c in _MERGE_LAWS]
+)
+def test_maintained_merges_obey_monoid_laws(spark, module, name, ddl, n_keys, law):
+    """Every maintained-state merge equals the Python dict fold of the
+    same rows, is commutative and associative, and treats an empty
+    maintained side as the identity.  MAX, MIN and keeper merges are
+    replay-idempotent (merge(s, s) == s); SUM is not — a replayed
+    micro-batch double-counts, which is why a CMS sink must dedupe on
+    batch_id.  The retention state also carries its activity set,
+    merged by union-distinct."""
+    import importlib
+
+    merge = getattr(
+        importlib.import_module(f"oxford_data_pipeline_spark.streaming.{module}"),
+        name,
+    )
+    types = [f.split()[1] for f in ddl.split(", ")]
+    a, b, c = (
+        [_law_row(types, n_keys, law, i, v) for i, v in s.items()]
+        for s in (_LAW_A, _LAW_B, _LAW_C)
+    )
+
+    def state(rows):
+        df = spark.createDataFrame(rows, ddl)
+        if name == "merge_retention_state":
+            return df, df.withColumnRenamed("cohort_week", "week")
+        return df
+
+    def got(s):
+        if name == "merge_retention_state":
+            return tuple(sorted(map(tuple, part.collect())) for part in s)
+        return sorted(map(tuple, s.collect()))
+
+    def want(*states):
+        return _law_fold(name, law, n_keys, *states)
+
+    sa, sb, sc = state(a), state(b), state(c)
+    assert got(merge(sa, sb)) == want(a, b)
+    assert got(merge(sb, sa)) == want(a, b)
+    assert got(merge(merge(sa, sb), sc)) == want(a, b, c)
+    assert got(merge(sa, merge(sb, sc))) == want(a, b, c)
+    assert got(merge(state([]), sa)) == want(a)
+    twice = got(merge(sa, sa))
+    if law == "sum":
+        assert twice == want(a, a) and twice != want(a)
+    else:
+        assert twice == want(a) == got(sa)
