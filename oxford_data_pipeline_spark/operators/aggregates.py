@@ -9,8 +9,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def mean_std_sem(col: str) -> tuple[Column, Column, Column, Column]:
+    """Mean, sample std, SEM and n of `col` over a group: n counts
+    rows (`count(*)`), the std is null unless n > 1, SEM = std/√n."""
+    n = F.count(F.lit(1))
+    std = F.when(n > 1, F.stddev_samp(col))
+    return F.avg(col), std, std / F.sqrt(n), n
 
 
 def psth(

@@ -24,69 +24,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_trigger_windows(
-    triggers: DataFrame,
-    key: Sequence[str],
-    start_col: str = "start_bin",
-    pre: int = 75,
-    post: int = 150,
-) -> DataFrame:
-    """Expand each trigger row into one row per covered bin.
-
-    Output adds `bin` (absolute) and `t` (relative, in [-pre, +post]).
-    """
-    exploded = triggers.withColumn(
-        "bin",
-        F.explode(F.sequence(F.col(start_col) - pre, F.col(start_col) + post)),
-    )
-    return exploded.withColumn("t", F.col("bin") - F.col(start_col))
-
-
 def segment_by_events(
-    series: DataFrame,
-    triggers: DataFrame,
-    key: Sequence[str],
-    bin_col: str = "bin",
-    start_col: str = "start_bin",
-    pre: int = 75,
-    post: int = 150,
-    drop_boundary: bool = True,
-    bin_min: int | None = None,
-    bin_max_col: str | None = None,
+    series: DataFrame, triggers: DataFrame, key: Sequence[str], pre: int, post: int
 ) -> DataFrame:
     """Segment a long series table into event-aligned epochs (J1 + F3).
 
-    series   : (key..., bin_col, payload...) long continuous series.
-    triggers : (key..., trigger id columns..., start_col) event table.
+    series   : (key..., bin, payload...) long continuous series.
+    triggers : (key..., trigger id columns..., start_bin) event table.
     Returns series payload rows annotated with every trigger column plus
-    relative time `t`; one output row per (series row, covering trigger).
+    absolute `bin` and relative time `t` in [-pre, +post]; one output
+    row per (series row, covering trigger).
 
-    drop_boundary=True applies F3: triggers whose window would exit
-    [bin_min, bin_max] are dropped entirely (the reference drops the
-    whole trial, not just the out-of-range samples). `bin_max_col`
-    names a per-key column on `triggers` holding the series max bin;
-    when None the window is validated against observed per-key extent
-    computed from `series` (an aggregate + broadcast-friendly join).
+    F3: a trigger whose window would exit its key's observed extent of
+    `series` (an aggregate + broadcast join) is dropped entirely — the
+    reference drops the whole trial, not just the out-of-range samples.
     """
     key = list(key)
-    if drop_boundary:
-        if bin_max_col is None:
-            extent = series.groupBy(*key).agg(
-                F.min(bin_col).alias("_bin_lo"), F.max(bin_col).alias("_bin_hi")
-            )
-            triggers = triggers.join(F.broadcast(extent), key, "inner").filter(
-                (F.col(start_col) - pre >= F.col("_bin_lo"))
-                & (F.col(start_col) + post <= F.col("_bin_hi"))
-            ).drop("_bin_lo", "_bin_hi")
-        else:
-            lo = bin_min if bin_min is not None else 0
-            triggers = triggers.filter(
-                (F.col(start_col) - pre >= F.lit(lo))
-                & (F.col(start_col) + post <= F.col(bin_max_col))
-            )
-
-    windows = explode_trigger_windows(triggers, key, start_col, pre, post)
+    start = F.col("start_bin")
+    extent = series.groupBy(*key).agg(
+        F.min("bin").alias("_bin_lo"), F.max("bin").alias("_bin_hi")
+    )
+    windows = (
+        triggers.join(F.broadcast(extent), key, "inner")
+        .filter((start - pre >= F.col("_bin_lo")) & (start + post <= F.col("_bin_hi")))
+        .drop("_bin_lo", "_bin_hi")
+        .withColumn("bin", F.explode(F.sequence(start - pre, start + post)))
+        .withColumn("t", F.col("bin") - start)
+    )
     # Equi-join on (key..., bin): shuffle-friendly; Catalyst broadcasts
     # `windows` automatically when the trigger side is small.
-    return series.join(windows, [*key, bin_col], "inner")
-
+    return series.join(windows, [*key, "bin"], "inner")

@@ -15,30 +15,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from oxford_data_pipeline_spark.operators.aggregates import mean_std_sem
 from oxford_data_pipeline_spark.pipeline.session_pipeline import (
     PipelineConfig,
     project,
+    segment_conditions,
     tag_regions,
 )
-from oxford_data_pipeline_spark.operators.event_window import segment_by_events
 from oxford_data_pipeline_spark.plans.memo import bounded_once
-
-
-def segment_conditions(
-    firing: DataFrame, events: DataFrame, cfg: PipelineConfig, labels: list[str]
-) -> DataFrame:
-    """S4 — one pass over all conditions: the per-condition source union
-    is a single label-IN filter carrying `trial_type` through J1."""
-    triggers = events.filter(F.col("label").isin(labels)).select(
-        "session",
-        "trial_id",
-        F.col("label").alias("trial_type"),
-        F.col("start_time").alias("start_bin"),
-    )
-    return segment_by_events(
-        firing, triggers, key=["session"], pre=cfg.pre_bins, post=cfg.post_bins,
-        drop_boundary=True,
-    ).select("session", "trial_type", "trial_id", "neuron_id", "t", "rate")
 
 
 def cross_condition_projections(
@@ -124,14 +108,11 @@ def aligned_cross_session_stats(
     aligned = timecourses.join(F.broadcast(decisions), keys).withColumn(
         "u_aligned", F.col("u") * F.col("sign")
     )
-    n = F.count(F.lit(1))
-    std = F.when(n > 1, F.stddev_samp("u_aligned"))
+    mean, std, sem, n = mean_std_sem("u_aligned")
     return aligned.groupBy(
         "trial_type", "pair_r1", "pair_r2", "side", "component", "t"
     ).agg(
-        F.avg("u_aligned").alias("mean_u"),
-        std.alias("std_u"),
-        (std / F.sqrt(n)).alias("sem_u"),
+        mean.alias("mean_u"), std.alias("std_u"), sem.alias("sem_u"),
         n.alias("n_sessions"),
     )
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oxford_data_pipeline_spark.functions.compat import round6
+from oxford_data_pipeline_spark.operators.aggregates import mean_std_sem
 from oxford_data_pipeline_spark.pipeline.reports import (
     ANATOMICAL_ORDER,
     min_sessions_filter,
@@ -43,12 +44,12 @@ def connectivity_figure_table(
     ranked = ranked_components(min_sessions_filter(cca_r2, min_sessions)).filter(
         F.col("rnk").isin(*ranks)
     )
-    n = F.count(F.lit(1))
+    mean, std, _, n = mean_std_sem("mean_cv_r2")
     return (
         ranked.groupBy(F.col("rnk").alias("rank"), F.col("pair_r1"), F.col("pair_r2"))
         .agg(
-            round6(F.avg("mean_cv_r2")).alias("mean_r2"),
-            round6(F.when(n > 1, F.stddev_samp("mean_cv_r2"))).alias("std_r2"),
+            round6(mean).alias("mean_r2"),
+            round6(std).alias("std_r2"),
             n.alias("n_sessions"),
         )
         .withColumn("row_idx", F.array_position(order_arr, F.col("pair_r1")))
@@ -87,14 +88,13 @@ def timecourse_figure_table(projection_avg: DataFrame) -> DataFrame:
     session — the line+band marks of
     `create_temporal_projection_figure` (`CCA_test_all.py:596-813`)."""
     cut = truncate_to_min_length(projection_avg)
-    n = F.count(F.lit(1))
-    std = F.when(n > 1, F.stddev_samp("mean_value"))
+    mean, std, sem, n = mean_std_sem("mean_value")
     return (
         cut.groupBy("pair_r1", "pair_r2", "side", "component", "t")
         .agg(
-            round6(F.avg("mean_value")).alias("mean_value"),
+            round6(mean).alias("mean_value"),
             round6(std).alias("std_value"),
-            round6(std / F.sqrt(n)).alias("sem_value"),
+            round6(sem).alias("sem_value"),
             n.alias("n_sessions"),
         )
         .orderBy("pair_r1", "pair_r2", "side", "component", "t")
@@ -107,14 +107,13 @@ def sensitivity_figure_table(sensitivity: DataFrame) -> DataFrame:
     reference's sensitivity-curve figure
     (`Matlab_part/Oxford_glm_sensitivity.m:345-420`): top-|β| removal
     vs seeded-random removal as the two curves."""
-    n = F.count(F.lit(1))
-    std = F.when(n > 1, F.stddev_samp("r2"))
+    mean, std, sem, n = mean_std_sem("r2")
     return (
         sensitivity.groupBy("strategy", "pct_removed")
         .agg(
-            round6(F.avg("r2")).alias("mean_r2"),
+            round6(mean).alias("mean_r2"),
             round6(std).alias("std_r2"),
-            round6(std / F.sqrt(n)).alias("sem_r2"),
+            round6(sem).alias("sem_r2"),
             n.alias("n_fits"),
         )
         .orderBy("strategy", "pct_removed")
@@ -126,14 +125,13 @@ def variance_figure_table(pca_variance: DataFrame) -> DataFrame:
     cumulative explained variance — the curves of the PCA variant's
     cumulative-variance figure (`PCA_test_all_seperate.py:228-311`,
     consuming `perform_region_pca.m:201-204`)."""
-    n = F.count(F.lit(1))
-    std = F.when(n > 1, F.stddev_samp("cumulative"))
+    mean, std, sem, n = mean_std_sem("cumulative")
     return (
         pca_variance.groupBy("region", "component")
         .agg(
-            round6(F.avg("cumulative")).alias("mean_cumulative"),
+            round6(mean).alias("mean_cumulative"),
             round6(std).alias("std_cumulative"),
-            round6(std / F.sqrt(n)).alias("sem_cumulative"),
+            round6(sem).alias("sem_cumulative"),
             n.alias("n_sessions"),
         )
         .orderBy("region", "component")

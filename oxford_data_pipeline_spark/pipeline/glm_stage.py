@@ -20,7 +20,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oxford_data_pipeline_spark.pipeline.session_pipeline import tag_regions
+from oxford_data_pipeline_spark.pipeline.session_pipeline import (
+    dense_block,
+    grouped_fit,
+    tag_regions,
+)
+
+_KEYS = ["session", "pair_r1", "pair_r2", "region"]
 
 
 def _seed_from(*parts) -> int:
@@ -37,14 +43,26 @@ def _design(
 ) -> DataFrame:
     """J4 — each pair's component-`component` latent on its `side`,
     joined at every (trial, t) sample with the rates of the sampled
-    neurons of both regions of the pair (tagged as `n_region`)."""
+    neurons of both regions of the pair."""
     latent = projections.filter(
         (F.col("component") == component) & (F.col("side") == side)
     ).select("session", "pair_r1", "pair_r2", "trial_id", "t", "value")
-    tagged = tag_regions(segmented, sampled).withColumnRenamed("region", "n_region")
-    return latent.join(tagged, ["session", "trial_id", "t"]).filter(
-        (F.col("n_region") == F.col("pair_r1")) | (F.col("n_region") == F.col("pair_r2"))
+    return latent.join(tag_regions(segmented, sampled), ["session", "trial_id", "t"]).filter(
+        (F.col("region") == F.col("pair_r1")) | (F.col("region") == F.col("pair_r2"))
     )
+
+
+def _block(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One (session, pair, region) design: the rates X in (trial, t)
+    order, the latent y at the same samples, and X's neuron ids."""
+    X, neurons, index = dense_block(pdf)
+    y = (
+        pdf.drop_duplicates(["trial_id", "t"])
+        .set_index(["trial_id", "t"])["value"]
+        .reindex(index)
+        .to_numpy(dtype=float)
+    )
+    return X, y, neurons
 
 
 def glm_fit(
@@ -60,45 +78,22 @@ def glm_fit(
     coefficient with inference, plus model-level stats repeated."""
     from oxford_data_pipeline_spark.ml.linalg import ols_inference
 
-    joined = _design(projections, segmented, sampled, component, side)
-
-    _COLS = ["session", "pair_r1", "pair_r2", "region", "neuron_id", "beta",
-             "se", "t_stat", "p_value", "r2", "adj_r2", "aic", "bic", "n_samples"]
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        piv = pdf.pivot_table(
-            index=["trial_id", "t"], columns="neuron_id", values="rate",
-            aggfunc="first", fill_value=0.0,
-        ).sort_index()
-        yv = (
-            pdf.drop_duplicates(["trial_id", "t"])
-            .set_index(["trial_id", "t"])["value"]
-            .reindex(piv.index)
-            .to_numpy(dtype=float)
-        )
-        X = piv.to_numpy(dtype=float)
-        sd = X.std(axis=0, ddof=1)
-        mu = X.mean(axis=0)
-        X = (X - mu) / np.where(sd > 0, sd, 1.0)
+    def fit(key, pdf: pd.DataFrame) -> dict | None:
+        X, y, neurons = _block(pdf)
         if X.shape[0] <= X.shape[1] + 2:
-            return pd.DataFrame(columns=_COLS)
-        res = ols_inference(X, yv)
-        nids = [int(c) for c in piv.columns]
-        rows = []
-        for i, nid in enumerate(nids):
-            rows.append(
-                (pdf["session"].iloc[0], pdf["pair_r1"].iloc[0],
-                 pdf["pair_r2"].iloc[0], pdf["n_region"].iloc[0], nid,
-                 float(res["beta"][i + 1]), float(res["se"][i + 1]),
-                 float(res["t"][i + 1]), float(res["p"][i + 1]),
-                 float(res["r2"]), float(res["adj_r2"]), float(res["aic"]),
-                 float(res["bic"]), int(res["n"]))
-            )
-        return pd.DataFrame(rows, columns=_COLS)
+            return None
+        sd = X.std(axis=0, ddof=1)
+        res = ols_inference((X - X.mean(axis=0)) / np.where(sd > 0, sd, 1.0), y)
+        return {
+            "neuron_id": neurons, "beta": res["beta"][1:], "se": res["se"][1:],
+            "t_stat": res["t"][1:], "p_value": res["p"][1:], "r2": res["r2"],
+            "adj_r2": res["adj_r2"], "aic": res["aic"], "bic": res["bic"],
+            "n_samples": res["n"],
+        }
 
-    return joined.groupBy("session", "pair_r1", "pair_r2", "n_region").applyInPandas(
-        fit,
-        schema="session string, pair_r1 string, pair_r2 string, region string,"
+    return grouped_fit(
+        _design(projections, segmented, sampled, component, side), _KEYS, fit,
+        "session string, pair_r1 string, pair_r2 string, region string,"
         " neuron_id int, beta double, se double, t_stat double, p_value double,"
         " r2 double, adj_r2 double, aic double, bic double, n_samples long",
     )
@@ -123,60 +118,39 @@ def sensitivity_grid(
     """M7 — refit after removing top-|β| ρ% of neurons (W2 schedule) or
     seeded-random ρ% × Monte-Carlo iterations; concentration index =
     ΔR²_top(50) − ΔR²_rand(50) computable from the output
-    (`Oxford_glm_sensitivity.m:54-55,256-342`)."""
+    (`Oxford_glm_sensitivity.m:54-55,256-342`). The top-|β| order ranks
+    the β of the unstandardized rates, while `glm_fit` reports the β of
+    z-scored rates, so the two can order neurons differently."""
     from oxford_data_pipeline_spark.ml.linalg import ols_inference
 
-    joined = _design(projections, segmented, sampled, component, side)
     pcts = list(pcts)
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        piv = pdf.pivot_table(
-            index=["trial_id", "t"], columns="neuron_id", values="rate",
-            aggfunc="first", fill_value=0.0,
-        ).sort_index()
-        yv = (
-            pdf.drop_duplicates(["trial_id", "t"])
-            .set_index(["trial_id", "t"])["value"]
-            .reindex(piv.index)
-            .to_numpy(dtype=float)
-        )
-        X = piv.to_numpy(dtype=float)
+    def fit(key, pdf: pd.DataFrame) -> dict | None:
+        X, y, _ = _block(pdf)
         d = X.shape[1]
         if X.shape[0] <= d + 2:
-            return pd.DataFrame(
-                columns=["session", "pair_r1", "pair_r2", "region", "strategy",
-                         "pct_removed", "iteration", "r2"]
-            )
-        base = ols_inference(X, yv, inference=False)
+            return None
+        base = ols_inference(X, y, inference=False)
         order = np.argsort(-np.abs(base["beta"][1:]), kind="stable")
-        key = (pdf["session"].iloc[0], pdf["pair_r1"].iloc[0],
-               pdf["pair_r2"].iloc[0], pdf["n_region"].iloc[0])
-        rows = []
+        runs = []
         for pct in pcts:
             n_drop = int(np.floor(d * pct / 100.0))
-            keep = np.setdiff1d(np.arange(d), order[:n_drop])
-            r2_top = (
-                ols_inference(X[:, keep], yv, inference=False)["r2"]
-                if keep.size else np.nan
-            )
-            rows.append((*key, "top", pct, 0, float(r2_top)))
+            runs.append(("top", pct, 0, order[:n_drop]))
             for it in range(mc_iters):
                 rng = np.random.default_rng(_seed_from("m7", *key, pct, it))
-                drop = rng.choice(d, size=n_drop, replace=False)
-                keep_r = np.setdiff1d(np.arange(d), drop)
-                r2_r = (
-                    ols_inference(X[:, keep_r], yv, inference=False)["r2"]
-                    if keep_r.size else np.nan
-                )
-                rows.append((*key, "random", pct, it, float(r2_r)))
-        return pd.DataFrame(
-            rows, columns=["session", "pair_r1", "pair_r2", "region", "strategy",
-                           "pct_removed", "iteration", "r2"]
-        )
+                runs.append(("random", pct, it, rng.choice(d, size=n_drop, replace=False)))
+        strategy, pct_removed, iteration, drops = zip(*runs)
+        keeps = [np.setdiff1d(np.arange(d), drop) for drop in drops]
+        return {
+            "strategy": list(strategy), "pct_removed": list(pct_removed),
+            "iteration": list(iteration),
+            "r2": [ols_inference(X[:, keep], y, inference=False)["r2"] if keep.size
+                   else np.nan for keep in keeps],
+        }
 
-    return joined.groupBy("session", "pair_r1", "pair_r2", "n_region").applyInPandas(
-        fit,
-        schema="session string, pair_r1 string, pair_r2 string, region string,"
+    return grouped_fit(
+        _design(projections, segmented, sampled, component, side), _KEYS, fit,
+        "session string, pair_r1 string, pair_r2 string, region string,"
         " strategy string, pct_removed int, iteration int, r2 double",
     )
 

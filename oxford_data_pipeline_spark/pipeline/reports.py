@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from oxford_data_pipeline_spark.operators.aggregates import mean_std_sem
+
 ANATOMICAL_ORDER = [
     "mPFC", "ORB", "MOp", "MOs", "OLF", "STR", "STRv", "MD", "LP",
     "VALVM", "VPMPO", "ILM", "HY",
@@ -51,14 +53,10 @@ def connectivity_matrix(cca_r2: DataFrame, rank: int = 1) -> DataFrame:
     (`CCA_test_all.py:481-541`)."""
     order_arr = F.array(*[F.lit(x) for x in ANATOMICAL_ORDER])
     ranked = ranked_components(cca_r2).filter(F.col("rnk") == rank)
-    n = F.count(F.lit(1))
+    mean, std, _, n = mean_std_sem("mean_cv_r2")
     return (
         ranked.groupBy("pair_r1", "pair_r2")
-        .agg(
-            F.avg("mean_cv_r2").alias("mean_r2"),
-            F.when(n > 1, F.stddev_samp("mean_cv_r2")).alias("std_r2"),
-            n.alias("n_sessions"),
-        )
+        .agg(mean.alias("mean_r2"), std.alias("std_r2"), n.alias("n_sessions"))
         .withColumn("row_idx", F.array_position(order_arr, F.col("pair_r1")))
         .withColumn("col_idx", F.array_position(order_arr, F.col("pair_r2")))
     )

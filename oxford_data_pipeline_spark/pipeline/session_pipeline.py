@@ -3,7 +3,9 @@
 
 Phase map (reference → here):
 - Phase 2 extract+segment (`extract_session_data_mdl.m` +
-  `segment_mdl_to_trials.m`)      → segment_trials (F1-F3 + J1),
+  `segment_mdl_to_trials.m`)      → segment_conditions (F1-F3 + J1,
+                                     every label in one pass) and its
+                                     one-label case segment_trials,
                                      tagged once with the sampled
                                      neurons' regions
 - Phase 3 region grouping (`perform_region_analysis.m`)
@@ -11,13 +13,22 @@ Phase map (reference → here):
                                      sample_neurons (M18) +
                                      region_pairs (J3/J6)
 - PSTH (`save_session_results.m:76-109`) → psth_table (A1)
-- Phase 4 PCA (`perform_region_pca.m`)   → fit_region_pca (M4 UDF)
-- Phase 5 CCA (`perform_session_cca.m`)  → fit_pair_cca (M1/M2 UDF,
-                                           M17 optional shuffle) +
+- Phase 4 PCA (`perform_region_pca.m`)   → fit_region_pca (M4 kernel
+                                           via grouped_fit)
+- Phase 5 CCA (`perform_session_cca.m`)  → fit_pair_cca (M1/M2 kernel
+                                           via grouped_fit, M17
+                                           optional shuffle) +
                                            significant_components (W5)
                                            + project (M5 UDF)
 - Phase 6 save (`single_session_oxford_CCA_mdl.m:308-321`)
                                    → sinks.write_partitioned (S5)
+
+The four grouped fits (M4 and M1/M2 here, `glm_stage`'s M6 GLM and M7
+sensitivity grid) are NumPy kernels behind one adapter: `dense_block`
+is the one pivot of a group's rates into a [samples × neurons] matrix,
+and `grouped_fit` the one `applyInPandas` wrapper, which adds the group
+keys, emits nothing for a group too small to fit and orders the output
+columns by the schema.
 
 Every stage is a DataFrame in, DataFrame out; all sessions process in
 one job, in parallel, with one shuffle per stage boundary.
@@ -44,14 +55,17 @@ per-session time courses and flip decisions the same way.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window as W
 
+from oxford_data_pipeline_spark.operators.aggregates import mean_std_sem
 from oxford_data_pipeline_spark.operators.event_window import segment_by_events
 from oxford_data_pipeline_spark.plans.memo import bounded_once
 
@@ -82,23 +96,29 @@ class PipelineConfig:
 # ---------------------------------------------------------------------------
 
 
+def segment_conditions(
+    firing: DataFrame, events: DataFrame, cfg: PipelineConfig, labels: list[str]
+) -> DataFrame:
+    """Label-filtered (F2), boundary-validated (F3) event-window join
+    (J1) of every condition in `labels` in one pass (S4): firing samples
+    within [start−pre, start+post] of each trial, with its `trial_type`
+    and relative time t. Sparse zeros are implicit (absent rows)."""
+    triggers = events.filter(F.col("label").isin(labels)).select(
+        "session",
+        "trial_id",
+        F.col("label").alias("trial_type"),
+        F.col("start_time").alias("start_bin"),
+    )
+    return segment_by_events(
+        firing, triggers, key=["session"], pre=cfg.pre_bins, post=cfg.post_bins
+    ).select("session", "trial_type", "trial_id", "neuron_id", "t", "rate")
+
+
 def segment_trials(
     firing: DataFrame, events: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
-    """Label-filtered (F2), boundary-validated (F3) event-window join
-    (J1): firing samples within [start−pre, start+post] of each trial,
-    with relative time t. Sparse zeros are implicit (absent rows)."""
-    triggers = events.filter(F.col("label") == cfg.trial_type).select(
-        "session", "trial_id", F.col("start_time").alias("start_bin")
-    )
-    return segment_by_events(
-        firing,
-        triggers,
-        key=["session"],
-        pre=cfg.pre_bins,
-        post=cfg.post_bins,
-        drop_boundary=True,
-    ).select("session", "trial_id", "neuron_id", "t", "rate")
+    """`segment_conditions` of the configured trial type alone."""
+    return segment_conditions(firing, events, cfg, [cfg.trial_type]).drop("trial_type")
 
 
 # ---------------------------------------------------------------------------
@@ -170,11 +190,9 @@ def tag_regions(segmented: DataFrame, sampled: DataFrame) -> DataFrame:
 def psth_table(tagged: DataFrame) -> DataFrame:
     """A1 — trial-averaged rate ± std per (session, region, neuron, t)
     over the region-tagged samples (`save_session_results.m:87-106`)."""
-    n = F.count(F.lit(1))
+    mean, std, _, n = mean_std_sem("rate")
     return tagged.groupBy("session", "region", "neuron_id", "t").agg(
-        F.avg("rate").alias("mean_rate"),
-        F.when(n > 1, F.stddev_samp("rate")).alias("std_rate"),
-        n.alias("n_trials"),
+        mean.alias("mean_rate"), std.alias("std_rate"), n.alias("n_trials")
     )
 
 
@@ -183,14 +201,41 @@ def psth_table(tagged: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _matrix(pdf: pd.DataFrame, value_col: str = "rate") -> tuple[np.ndarray, list[int]]:
-    """Group rows → dense [samples × neurons] matrix: rows ordered by
-    (trial_id, t), columns by neuron_id; missing samples = 0 (sparse)."""
+def dense_block(
+    pdf: pd.DataFrame, index: pd.MultiIndex | None = None
+) -> tuple[np.ndarray, np.ndarray, pd.MultiIndex]:
+    """A group's rows as a dense [samples × neurons] rate matrix: rows in
+    (trial_id, t) order, or on the given shared `index`; columns by
+    neuron_id; absent samples 0. Returns (matrix, neuron ids, row index)."""
     piv = pdf.pivot_table(
-        index=["trial_id", "t"], columns="neuron_id", values=value_col,
+        index=["trial_id", "t"], columns="neuron_id", values="rate",
         aggfunc="first", fill_value=0.0,
-    ).sort_index()
-    return piv.to_numpy(dtype=float), [int(c) for c in piv.columns]
+    )
+    piv = piv.sort_index() if index is None else piv.reindex(index, fill_value=0.0)
+    return piv.to_numpy(dtype=float), piv.columns.to_numpy(), piv.index
+
+
+def grouped_fit(
+    df: DataFrame,
+    keys: list[str],
+    kernel: Callable[[tuple, pd.DataFrame], dict | None],
+    schema: str,
+) -> DataFrame:
+    """Run `kernel(key, pdf)` on each `keys` group of `df`. The kernel
+    returns a dict of output column arrays (scalars broadcast), or None
+    for a group too small to fit, which emits no rows. The group-key
+    columns are added from `key`, and columns come out in `schema`'s
+    order."""
+    columns = StructType.fromDDL(schema).fieldNames()
+
+    # unannotated: a partly annotated function makes applyInPandas warn
+    def run(key, pdf):
+        out = kernel(key, pdf)
+        if out is None:
+            return pd.DataFrame(columns=columns)
+        return pd.DataFrame({**dict(zip(keys, key)), **out}, columns=columns)
+
+    return df.groupBy(*keys).applyInPandas(run, schema=schema)
 
 
 def fit_region_pca(
@@ -203,33 +248,24 @@ def fit_region_pca(
 
     k, folds = cfg.n_components, cfg.cv_folds
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        Xm, neuron_ids = _matrix(pdf)
-        if Xm.shape[0] < folds + 2:
-            return pd.DataFrame(
-                columns=["session", "region", "neuron_id", "component", "weight",
-                         "explained", "cumulative"]
-            )
-        res = cv_pca(Xm, k, folds)
-        rows = []
-        kk = res["coefficients"].shape[1]
-        for ci in range(kk):
-            for ni, nid in enumerate(neuron_ids):
-                rows.append(
-                    (pdf["session"].iloc[0], pdf["region"].iloc[0], nid, ci + 1,
-                     float(res["coefficients"][ni, ci]),
-                     float(res["explained_variance"][ci]),
-                     float(res["cumulative_variance"][ci]))
-                )
-        return pd.DataFrame(
-            rows, columns=["session", "region", "neuron_id", "component", "weight",
-                           "explained", "cumulative"]
-        )
+    def fit(key, pdf: pd.DataFrame) -> dict | None:
+        X, neurons, _ = dense_block(pdf)
+        if X.shape[0] < folds + 2:
+            return None
+        res = cv_pca(X, k, folds)
+        kk, d = res["coefficients"].shape[1], len(neurons)
+        return {
+            "neuron_id": np.tile(neurons, kk),
+            "component": np.repeat(np.arange(1, kk + 1), d),
+            "weight": res["coefficients"].T.ravel(),
+            "explained": np.repeat(res["explained_variance"], d),
+            "cumulative": np.repeat(res["cumulative_variance"], d),
+        }
 
     # both tables below read this one fit output
-    out = bounded_once(tagged.groupBy("session", "region").applyInPandas(
-        fit,
-        schema="session string, region string, neuron_id int, component int,"
+    out = bounded_once(grouped_fit(
+        tagged, ["session", "region"], fit,
+        "session string, region string, neuron_id int, component int,"
         " weight double, explained double, cumulative double",
     ))
     weights = out.select("session", "region", "neuron_id", "component", "weight")
@@ -264,12 +300,10 @@ def fit_tagged_pair_cca(
         "side", F.when(F.col("region") == F.col("pair_r1"), "i").otherwise("j")
     )
     k, folds, shuffle = cfg.n_components, cfg.cv_folds, cfg.shuffle_trials
+    comps = np.arange(1, k + 1)
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        session = pdf["session"].iloc[0]
-        r1, r2 = pdf["pair_r1"].iloc[0], pdf["pair_r2"].iloc[0]
-        xi = pdf[pdf["side"] == "i"]
-        xj = pdf[pdf["side"] == "j"]
+    def fit(key, pdf: pd.DataFrame) -> dict | None:
+        session, r1, r2 = key
         # Both matrices are built on the SHARED (trial_id, t) sample
         # index — the union of rows observed on either side, zeros
         # filled per the engine's implicit-zero segment semantics.
@@ -279,16 +313,8 @@ def fit_tagged_pair_cca(
         shared = pd.MultiIndex.from_frame(
             pdf[["trial_id", "t"]].drop_duplicates().sort_values(["trial_id", "t"])
         )
-
-        def side_matrix(sdf: pd.DataFrame) -> tuple[np.ndarray, list[int]]:
-            piv = sdf.pivot_table(
-                index=["trial_id", "t"], columns="neuron_id", values="rate",
-                aggfunc="first", fill_value=0.0,
-            ).reindex(shared, fill_value=0.0)
-            return piv.to_numpy(dtype=float), [int(c) for c in piv.columns]
-
-        X, nx = side_matrix(xi)
-        Y, ny = side_matrix(xj)
+        X, nx, _ = dense_block(pdf[pdf["side"] == "i"], shared)
+        Y, ny, _ = dense_block(pdf[pdf["side"] == "j"], shared)
         if shuffle:
             # M17 — seeded trial-order shuffle of the Y side
             # (`perform_session_cca.m:128-133`, rng(12345,'twister')).
@@ -299,38 +325,29 @@ def fit_tagged_pair_cca(
             trials = list(dict.fromkeys(trial_of_row))  # index order
             seed = int.from_bytes(f"12345|{session}|{r1}|{r2}".encode()[:4], "big")
             perm = np.random.default_rng(seed).permutation(len(trials))
-            idx = np.concatenate(
-                [np.nonzero(trial_of_row == trials[p])[0] for p in perm]
-            )
-            Y = Y[idx]
-        n = X.shape[0]
-        if n < folds + 2 or X.shape[1] == 0 or Y.shape[1] == 0:
-            return pd.DataFrame(
-                columns=["session", "pair_r1", "pair_r2", "fold", "component",
-                         "side", "neuron_id", "r2", "weight"]
-            )
+            Y = Y[np.concatenate([np.nonzero(trial_of_row == trials[p])[0] for p in perm])]
+        if X.shape[0] < folds + 2 or X.shape[1] == 0 or Y.shape[1] == 0:
+            return None
         res = cv_cca(X, Y, k, folds)
-        rows = []
-        for fi in range(res["cv_R2"].shape[0]):
-            for ci in range(k):
-                rows.append((session, r1, r2, fi + 1, ci + 1, "", -1,
-                             float(res["cv_R2"][fi, ci]), float("nan")))
-        for ci in range(k):
-            for ni, nid in enumerate(nx):
-                rows.append((session, r1, r2, 0, ci + 1, "i", nid, float("nan"),
-                             float(res["mean_A"][ni, ci])))
-            for ni, nid in enumerate(ny):
-                rows.append((session, r1, r2, 0, ci + 1, "j", nid, float("nan"),
-                             float(res["mean_B"][ni, ci])))
-        return pd.DataFrame(
-            rows, columns=["session", "pair_r1", "pair_r2", "fold", "component",
-                           "side", "neuron_id", "r2", "weight"]
-        )
+        # the per-fold R² rows (fold ≥ 1), then the fold-mean weights
+        # (fold 0) of each component: side i's neurons, then side j's
+        n_folds, neurons = len(res["cv_R2"]), np.concatenate([nx, ny])
+        side_of = np.repeat(["i", "j"], [len(nx), len(ny)])
+        n_r2, n_w = n_folds * k, k * len(neurons)
+        return {
+            "fold": np.concatenate([np.repeat(np.arange(1, n_folds + 1), k), np.zeros(n_w, int)]),
+            "component": np.concatenate([np.tile(comps, n_folds), np.repeat(comps, len(neurons))]),
+            "side": np.concatenate([np.full(n_r2, ""), np.tile(side_of, k)]),
+            "neuron_id": np.concatenate([np.full(n_r2, -1), np.tile(neurons, k)]),
+            "r2": np.concatenate([res["cv_R2"].ravel(), np.full(n_w, np.nan)]),
+            "weight": np.concatenate([np.full(n_r2, np.nan),
+                                      np.vstack([res["mean_A"], res["mean_B"]]).T.ravel()]),
+        }
 
     # cca_r2 and cca_weights are two filters over this one fit output
-    out = bounded_once(sides.groupBy("session", "pair_r1", "pair_r2").applyInPandas(
-        fit,
-        schema="session string, pair_r1 string, pair_r2 string, fold int,"
+    out = bounded_once(grouped_fit(
+        sides, ["session", "pair_r1", "pair_r2"], fit,
+        "session string, pair_r1 string, pair_r2 string, fold int,"
         " component int, side string, neuron_id int, r2 double, weight double",
     ))
     cca_r2 = out.filter(F.col("fold") > 0).select(
@@ -435,14 +452,13 @@ def project(samples: DataFrame, cca_weights: DataFrame) -> DataFrame:
 def trial_averaged_projection(projections: DataFrame) -> DataFrame:
     """A2 — mean/std/SEM over trials of the projected latents
     (`cross_trial_type_cca_analysis.py:690-711`)."""
-    n = F.count(F.lit(1))
-    std = F.when(n > 1, F.stddev_samp("value"))
+    mean, std, sem, n = mean_std_sem("value")
     return projections.groupBy(
         "session", "pair_r1", "pair_r2", "side", "component", "t"
     ).agg(
-        F.avg("value").alias("mean_value"),
+        mean.alias("mean_value"),
         std.alias("std_value"),
-        (std / F.sqrt(n)).alias("sem_value"),
+        sem.alias("sem_value"),
         n.alias("n_trials"),
     )
 

@@ -77,9 +77,7 @@ def j1_event_psth(spark: SparkSession, sf_dir: str) -> DataFrame:
         series.filter(F.col("event_type") == "purchase")
         .select("user_id", F.col("bin").alias("start_bin"))
     )
-    segmented = segment_by_events(
-        series, triggers, key=["user_id"], pre=PRE, post=POST, drop_boundary=True
-    )
+    segmented = segment_by_events(series, triggers, key=["user_id"], pre=PRE, post=POST)
     out = psth(segmented, ["event_type"], value_col="value", t_col="t")
     return out.select(
         "event_type",

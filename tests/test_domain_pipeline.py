@@ -311,3 +311,188 @@ def test_pair_cca_missing_sample_equals_explicit_zero(spark, shuffle):
     assert w_s.keys() == w_d.keys()
     for key in w_s:
         assert w_s[key] == pytest.approx(w_d[key], abs=1e-9), key
+
+
+# ---------------------------------------------------------------------------
+# Grouped-fit oracle: CV-PCA, CV-CCA, OLS and the M7 grid recomputed in
+# NumPy from the collected tagged samples
+# ---------------------------------------------------------------------------
+
+
+def _dense(rows, index=None):
+    """[samples × neurons] rate matrix of `rows`: samples in (trial_id, t)
+    order (or on `index`), neurons ascending, absent samples 0."""
+    import numpy as np
+
+    if index is None:
+        index = sorted(set(zip(rows["trial_id"], rows["t"])))
+    neurons = sorted(set(rows["neuron_id"]))
+    at = {k: i for i, k in enumerate(index)}
+    col = {n: j for j, n in enumerate(neurons)}
+    X = np.zeros((len(index), len(neurons)))
+    for tr, t, n, v in zip(rows["trial_id"], rows["t"], rows["neuron_id"], rows["rate"]):
+        if (tr, t) in at:
+            X[at[(tr, t)], col[n]] = v
+    return X, neurons, index
+
+
+def _assert_close(got: dict, want: dict):
+    assert got.keys() == want.keys() and want
+    for key, value in want.items():
+        assert got[key] == pytest.approx(value, rel=1e-9, abs=1e-9, nan_ok=True), key
+
+
+def _m17_permutation(index, session, r1, r2):
+    """Row order of the M17 Y-side shuffle: whole trials permuted with
+    the pair's seed, each trial's rows kept in order."""
+    import numpy as np
+
+    trial_of_row = np.array([tr for tr, _ in index])
+    trials = list(dict.fromkeys(trial_of_row))
+    seed = int.from_bytes(f"12345|{session}|{r1}|{r2}".encode()[:4], "big")
+    perm = np.random.default_rng(seed).permutation(len(trials))
+    return np.concatenate([np.nonzero(trial_of_row == trials[p])[0] for p in perm])
+
+
+def _cca_oracle(tagged, pairs, cfg):
+    from oxford_data_pipeline_spark.ml.linalg import cv_cca
+
+    r2, weights = {}, {}
+    for p in pairs.itertuples():
+        s = tagged[tagged["session"] == p.session]
+        xi, xj = s[s["region"] == p.pair_r1], s[s["region"] == p.pair_r2]
+        index = sorted(set(zip(xi["trial_id"], xi["t"])) | set(zip(xj["trial_id"], xj["t"])))
+        X, nx, _ = _dense(xi, index)
+        Y, ny, _ = _dense(xj, index)
+        if cfg.shuffle_trials:
+            Y = Y[_m17_permutation(index, p.session, p.pair_r1, p.pair_r2)]
+        if len(index) < cfg.cv_folds + 2:
+            continue
+        res = cv_cca(X, Y, cfg.n_components, cfg.cv_folds)
+        pair = (p.session, p.pair_r1, p.pair_r2)
+        for f, row in enumerate(res["cv_R2"], 1):
+            for c, v in enumerate(row, 1):
+                r2[(*pair, f, c)] = v
+        for side, ids, W in (("i", nx, res["mean_A"]), ("j", ny, res["mean_B"])):
+            for n, row in zip(ids, W):
+                for c, v in enumerate(row, 1):
+                    weights[(*pair, side, n, c)] = v
+    return r2, weights
+
+
+def _tagged(res):
+    """Entry A's segmented samples of the sampled neurons, with region."""
+    return res["segmented"].toPandas().merge(
+        res["sampled_neurons"].select("session", "neuron_id", "region").toPandas(),
+        on=["session", "neuron_id"],
+    )
+
+
+def _glm_design(res, component=1, side="i"):
+    """Per (session, pair, region of the pair): the latent and the rates
+    of the region's sampled neurons at their common (trial_id, t)."""
+    import pandas as pd
+
+    latent = res["projections"].filter(
+        (F.col("component") == component) & (F.col("side") == side)
+    ).toPandas()
+    joined = latent.merge(_tagged(res), on=["session", "trial_id", "t"])
+    joined = joined[(joined["region"] == joined["pair_r1"]) | (joined["region"] == joined["pair_r2"])]
+    for key, g in joined.groupby(["session", "pair_r1", "pair_r2", "region"]):
+        X, neurons, index = _dense(g)
+        y = g.drop_duplicates(["trial_id", "t"]).set_index(["trial_id", "t"])["value"]
+        yield key, X, neurons, y.reindex(pd.MultiIndex.from_tuples(index)).to_numpy(float)
+
+
+def test_grouped_fits_match_numpy_oracle(results):
+    """Every number of the four grouped fits (M4 CV-PCA, M1/M2 CV-CCA
+    with and without the M17 shuffle, the M6 GLM and the M7 removal
+    grid) equals `ml.linalg` run on matrices rebuilt here from the
+    collected tagged samples."""
+    import hashlib
+
+    import numpy as np
+
+    from oxford_data_pipeline_spark.ml.linalg import cv_pca, ols_inference
+    from oxford_data_pipeline_spark.pipeline.fixtures import test_config
+    from oxford_data_pipeline_spark.pipeline.glm_stage import glm_fit, sensitivity_grid
+    from oxford_data_pipeline_spark.pipeline.session_pipeline import fit_pair_cca
+
+    res, cfg = results
+    tagged = _tagged(res)
+
+    # M4
+    want_w, want_v = {}, {}
+    for (session, region), g in tagged.groupby(["session", "region"]):
+        X, neurons, _ = _dense(g)
+        if X.shape[0] < cfg.cv_folds + 2:
+            continue
+        fit = cv_pca(X, cfg.n_components, cfg.cv_folds)
+        for n, row in zip(neurons, fit["coefficients"]):
+            for c, v in enumerate(row, 1):
+                want_w[(session, region, n, c)] = v
+        for c, (e, cum) in enumerate(
+                zip(fit["explained_variance"], fit["cumulative_variance"]), 1):
+            want_v[(session, region, c)] = (e, cum)
+    _assert_close({(r.session, r.region, r.neuron_id, r.component): r.weight
+                   for r in res["pca_weights"].collect()}, want_w)
+    got_v = {(r.session, r.region, r.component): (r.explained, r.cumulative)
+             for r in res["pca_variance"].collect()}
+    _assert_close(got_v, want_v)
+
+    # M1/M2, and M17 through the untagged entry point on the same samples
+    pairs = res["region_pairs"].toPandas()
+    for shuffle in (False, True):
+        c = test_config(shuffle_trials=shuffle)
+        if shuffle:
+            cca_r2, cca_w = fit_pair_cca(
+                res["segmented"], res["sampled_neurons"], res["region_pairs"], c)
+        else:
+            cca_r2, cca_w = res["cca_r2"], res["cca_weights"]
+        want_r2, want_cw = _cca_oracle(tagged, pairs, c)
+        _assert_close({(r.session, r.pair_r1, r.pair_r2, r.fold, r.component): r.r2
+                       for r in cca_r2.collect()}, want_r2)
+        _assert_close({(r.session, r.pair_r1, r.pair_r2, r.side, r.neuron_id,
+                        r.component): r.weight for r in cca_w.collect()}, want_cw)
+
+    # M6 (z-scored rates) and M7 (raw rates)
+    pcts, iters = (0, 25, 50, 75), 3
+    want_glm, want_grid = {}, {}
+    for key, X, neurons, y in _glm_design(res):
+        d = X.shape[1]
+        if X.shape[0] <= d + 2:
+            continue
+        sd = X.std(axis=0, ddof=1)
+        fit = ols_inference((X - X.mean(axis=0)) / np.where(sd > 0, sd, 1.0), y)
+        for i, n in enumerate(neurons, 1):
+            want_glm[(*key, n)] = (fit["beta"][i], fit["r2"], fit["adj_r2"], fit["n"], *(
+                (fit["se"][i], fit["t"][i], fit["p"][i], fit["aic"], fit["bic"])
+                if fit["r2"] < 1 - 1e-12 else ()))
+        base = ols_inference(X, y, inference=False)
+        order = np.argsort(-np.abs(base["beta"][1:]), kind="stable")
+
+        def r2_without(drop):
+            keep = np.setdiff1d(np.arange(d), drop)
+            return ols_inference(X[:, keep], y, inference=False)["r2"] if keep.size else np.nan
+
+        for pct in pcts:
+            n_drop = int(np.floor(d * pct / 100.0))
+            want_grid[(*key, "top", pct, 0)] = r2_without(order[:n_drop])
+            for it in range(iters):
+                h = hashlib.md5("|".join(map(str, ("m7", *key, pct, it))).encode())
+                rng = np.random.default_rng(int(h.hexdigest()[:8], 16))
+                want_grid[(*key, "random", pct, it)] = r2_without(
+                    rng.choice(d, size=n_drop, replace=False))
+    glm = glm_fit(res["projections"], res["segmented"], res["sampled_neurons"])
+    # side i's latent is a linear map of its own region's rates, so that
+    # region's fit can be exact; then its residual is rounding noise, and
+    # so are the statistics built on it (se, t, p, AIC, BIC)
+    _assert_close({(r.session, r.pair_r1, r.pair_r2, r.region, r.neuron_id):
+                   (r.beta, r.r2, r.adj_r2, r.n_samples, *(
+                       (r.se, r.t_stat, r.p_value, r.aic, r.bic)
+                       if r.r2 < 1 - 1e-12 else ()))
+                   for r in glm.collect()}, want_glm)
+    grid = sensitivity_grid(res["projections"], res["segmented"], res["sampled_neurons"],
+                            pcts=pcts, mc_iters=iters)
+    _assert_close({(r.session, r.pair_r1, r.pair_r2, r.region, r.strategy,
+                    r.pct_removed, r.iteration): r.r2 for r in grid.collect()}, want_grid)
